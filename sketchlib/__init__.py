@@ -13,8 +13,9 @@ Spark's execution model:
 - ``sketchlib.kll``        — KLL quantile sketch.
 - ``sketchlib.kmv``        — KMV / bottom-k (distinct estimate + coordinated sample).
 - ``sketchlib.aggregator`` — the shared mergeable-Aggregator interface all six implement.
-- ``sketchlib.spark``      — DataFrame-level plumbing: mapInPandas partials,
-                             applyInPandas merges, salted/tree-merge plans,
+- ``sketchlib.spark``      — DataFrame-level plumbing: one two-phase plan
+                             (mapInPandas partials + mapInPandas merge) for
+                             every family, salted tree merge,
                              checkpoint/resume, scalar query UDFs.
 - ``sketchlib.data``       — deterministic Common-Crawl-style page generator +
                              the fixed html→text extraction rule.

@@ -32,6 +32,7 @@ _MAGIC_SPARSE = b"BLMS"
 
 class Bloom(Aggregator):
     __slots__ = ("m", "k", "seed", "bytemap", "n_added", "_sparse")
+    ingest = "hashed"
 
     def __init__(
         self,

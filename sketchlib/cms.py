@@ -27,6 +27,7 @@ _MAGIC = b"CMS1"
 
 class CMS(Aggregator):
     __slots__ = ("width", "depth", "seed", "table", "total")
+    ingest = "hashed"
 
     def __init__(
         self,

@@ -75,6 +75,7 @@ def _alpha(m: int) -> float:
 
 class HLL(Aggregator):
     __slots__ = ("p", "m", "_regs", "_sidx", "_srho", "_scount")
+    ingest = "hashed"
 
     def __init__(self, p: int = 14) -> None:
         if not 4 <= p <= 18:

@@ -38,6 +38,7 @@ _MAGIC = b"KMV1"
 
 class KMV(Aggregator):
     __slots__ = ("k", "hashes")
+    ingest = "hashed"
 
     def __init__(self, k: int = 1024) -> None:
         if k < 2:

@@ -47,6 +47,7 @@ _MAGIC = b"MG01"
 
 class MisraGries(Aggregator):
     __slots__ = ("m", "counts", "n")
+    ingest = "string"
 
     def __init__(self, m: int = 64) -> None:
         if m < 1:

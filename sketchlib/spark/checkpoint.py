@@ -28,15 +28,13 @@ same schema, append-only, hermetic for tests (SURVEY.md §7.3.7).
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
+from collections import Counter
 from typing import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from sketchlib.tdigest.core import MergingDigest
 
 CHECKPOINT_SCHEMA = (
     "run_id string, part_id int, key string, digest binary, "
@@ -47,11 +45,12 @@ CHECKPOINT_SCHEMA = (
 class TDigestCheckpointer:
     """Checkpointer for any sketch kind; named for its default.
 
-    ``sketch='tdigest'`` (default) ingests the value column as float64 and
-    finalizes via lossless digest union + compress.  Sibling kinds
-    ('hll'/'cms'/'bloom'/'kll'/'kmv', see ``sketch_ops.SKETCHES``) ingest
-    via the same JVM-side xxhash64 projection as the batch path and
-    finalize via their own merge; for the order-insensitive kinds the
+    ``sketch='tdigest'`` (default) builds digests under ``delta``/``discrete``;
+    any other ``sketch_ops.SKETCHES`` kind builds under ``params``.  Both
+    phases are the shared plan's: ``run`` folds each logical partition with
+    the batch builder (``_part_id`` as the leading key, so ingest — hashing,
+    NULL masking, casts, NULL-key groups — is exactly the batch path's), and
+    ``finalize`` is ``profile_merge``.  For the order-insensitive kinds the
     byte-identical-resume guarantee holds exactly as for digests."""
 
     def __init__(
@@ -88,13 +87,18 @@ class TDigestCheckpointer:
         if table_format not in ("parquet", "orc"):
             raise ValueError(f"unsupported checkpoint format {table_format!r}")
         self.table_format = table_format
-        if sketch != "tdigest":
-            from sketchlib.spark.sketch_ops import SKETCHES
+        from sketchlib.spark.sketch_ops import SKETCHES
 
-            if sketch not in SKETCHES:
-                raise ValueError(f"unknown sketch kind {sketch!r}")
+        if sketch not in SKETCHES:
+            raise ValueError(f"unknown sketch kind {sketch!r}")
 
     # -- helpers ---------------------------------------------------------------
+
+    def _spec(self) -> dict:
+        params = ({"delta": self.delta, "discrete": self.discrete}
+                  if self.sketch == "tdigest" else self.params)
+        return {"name": self.sketch, "kind": self.sketch, "col": self.value_col,
+                "params": params}
 
     def _with_part_id(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
@@ -172,20 +176,10 @@ class TDigestCheckpointer:
         many partitions complete (for resume tests).  Returns #partitions
         processed."""
         from sketchlib.spark.shipping import ensure_on_workers
+        from sketchlib.spark.sketch_ops import _fold, _project
 
         ensure_on_workers(self.spark)
-        hashed = False
-        if self.sketch != "tdigest":
-            from sketchlib.spark.sketch_ops import _HASHED
-
-            hashed = self.sketch in _HASHED
-        # project the value into an internal column: keeps the plan valid
-        # when value_col == id_col (or a key), carries the hash for the
-        # hashed kinds, and casts to double for the numeric kinds exactly
-        # like the batch path (sketch_ops.sketch_partials / tdigest_partials)
-        val = (F.xxhash64(self.value_col) if hashed
-               else F.col(self.value_col).cast("double")).alias("_v")
-        tagged = self._with_part_id(df.select(self.id_col, *self.keys, val))
+        tagged = self._with_part_id(df)
         done = self.completed_parts()
         pending = tagged.join(
             F.broadcast(done.withColumnRenamed("part_id", "_part_id")),
@@ -199,66 +193,44 @@ class TDigestCheckpointer:
         if not pending_ids:
             return 0
 
-        keys, value_col, delta, discrete = (
-            self.keys, self.value_col, self.delta, self.discrete,
+        keys = ["_part_id"] + self.keys
+        specs = [self._spec()]
+        run_id, input_snapshot, lineage = (
+            self.run_id, self._input_snapshot(df), self._lineage(),
         )
-        run_id, ckpt_path, input_snapshot = (
-            self.run_id, self.ckpt_path, self._input_snapshot(df),
-        )
-        sketch, params = self.sketch, self.params
-        lineage = self._lineage()
 
         def build(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import numpy as np
-
-            if sketch == "tdigest":
-                make = lambda: MergingDigest(delta=delta, discrete=discrete)  # noqa: E731
-            else:
-                from sketchlib.spark.sketch_ops import SKETCHES
-
-                cls = SKETCHES[sketch]
-                make = lambda: cls(**params)  # noqa: E731
-
             t0 = time.time()
-            aggs: dict[tuple, object] = {}
-            rows_per_part: dict[int, int] = {}
-            for pdf in batches:
-                if hashed:
-                    vals = pdf["_v"].to_numpy(dtype="int64").view(np.uint64)
-                else:
-                    vals = pdf["_v"].to_numpy(dtype="float64", na_value=np.nan)
-                for gk, idx in pdf.groupby(["_part_id"] + keys, sort=False).indices.items():
-                    gk = gk if isinstance(gk, tuple) else (gk,)
-                    agg = aggs.get(gk)
-                    if agg is None:
-                        agg = aggs[gk] = make()
-                    if hashed:
-                        agg.update_hashed(vals[idx])
-                    else:
-                        agg.update_batch(vals[idx])
-                    rows_per_part[gk[0]] = rows_per_part.get(gk[0], 0) + len(idx)
+            rows_per_part: Counter = Counter()
+
+            def counted():
+                for pdf in batches:
+                    rows_per_part.update(pdf["_part_id"].value_counts().to_dict())
+                    yield pdf
+
+            aggs = _fold(counted(), keys, specs)
             if not aggs:
                 return
             wall = (time.time() - t0) * 1000.0
-            out = pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     "run_id": run_id,
-                    "part_id": [gk[0] for gk in aggs],
-                    "key": ["|".join(str(x) for x in gk[1:]) for gk in aggs],
+                    "part_id": [k[0] for k in aggs],
+                    "key": [_key_string(k[1:-1]) for k in aggs],
                     "digest": [a.serialize() for a in aggs.values()],
-                    "rows": [rows_per_part[gk[0]] for gk in aggs],
+                    "rows": [rows_per_part[k[0]] for k in aggs],
                     "wall_ms": wall,
                     "input_snapshot": input_snapshot,
                     "lineage": lineage,
                 }
             )
-            yield out
 
         ckpt_rows = (
-            pending.repartition(len(pending_ids), "_part_id")
+            _project(pending, keys, specs)
+            .repartition(len(pending_ids), "_part_id")
             .mapInPandas(build, schema=CHECKPOINT_SCHEMA)
         )
-        ckpt_rows.write.mode("append").format(self.table_format).save(ckpt_path)
+        ckpt_rows.write.mode("append").format(self.table_format).save(self.ckpt_path)
         return len(pending_ids)
 
     def _input_snapshot(self, df: DataFrame) -> str:
@@ -271,18 +243,19 @@ class TDigestCheckpointer:
         """Merge all checkpointed partials into one sketch per key —
         order-independent, so interrupted and clean runs agree byte-for-byte
         (exactly, for the order-insensitive kinds)."""
+        from sketchlib.spark.sketch_ops import _long, _one, profile_merge
+
         ckpt = self.spark.read.format(self.table_format).load(self.ckpt_path)
         # deduplicate retried partitions (same part_id written twice): partials
         # are deterministic per (part_id, key), keep one
-        partials = ckpt.dropDuplicates(["part_id", "key"]).select("key", "digest")
-        if self.sketch == "tdigest":
-            from sketchlib.spark.tdigest_ops import tdigest_merge
+        partials = _long(ckpt.dropDuplicates(["part_id", "key"]), ["key"],
+                         self.sketch, "digest")
+        return _one(profile_merge(partials, ["key"], [self._spec()]), ["key"], "digest")
 
-            return tdigest_merge(partials, ["key"], self.delta, self.discrete,
-                                 compress=True)
-        from sketchlib.spark.sketch_ops import sketch_merge
 
-        return sketch_merge(
-            partials.withColumnRenamed("digest", "sketch"), ["key"],
-            self.sketch, self.params,
-        ).withColumnRenamed("sketch", "digest")
+def _key_string(key: tuple) -> str | None:
+    """The checkpoint table's ``key``: the key parts joined by ``|``; a NULL
+    single key stays NULL, a NULL part of a composite key renders empty."""
+    if len(key) == 1 and pd.isna(key[0]):
+        return None
+    return "|".join("" if pd.isna(x) else str(x) for x in key)

@@ -31,34 +31,40 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
-from sketchlib.spark.tdigest_ops import tdigest_merge, tdigest_partials
+from sketchlib.spark.sketch_ops import profile_merge, profile_partials
 
 
-def add_salt(partials: DataFrame, n_salts: int, salt_col: str = "_salt",
-             blob_col: str = "digest") -> DataFrame:
-    """Deterministic salt from the partial row content (hash of the digest
-    bytes) — uniform, reproducible, no RNG."""
+def add_salt(partials: DataFrame, n_salts: int) -> DataFrame:
+    """Deterministic ``_salt`` from the partial row content (hash of the
+    sketch bytes) — uniform, reproducible, no RNG."""
     return partials.withColumn(
-        salt_col, F.pmod(F.xxhash64(F.col(blob_col)), F.lit(n_salts)).cast("int")
+        "_salt", F.pmod(F.xxhash64("sketch"), F.lit(n_salts)).cast("int")
     )
 
 
-def tree_merge_tdigest(
+def tree_merge(
     partials: DataFrame,
     keys: list[str],
-    delta: float = 0.01,
-    discrete: bool = False,
+    specs: list[dict],
     fanin: int = 64,
     est_partials_per_key: int | None = None,
 ) -> DataFrame:
-    """Merge partial digests with bounded reducer fan-in.
+    """``sketch_ops.profile_merge`` with bounded reducer fan-in: salted
+    intermediate merge levels over the long-format partials of any specs
+    (every family in ``sketch_ops.SKETCHES``).
 
-    est_partials_per_key defaults to the partial row count over distinct
-    keys (cheap: the partials frame is tiny relative to the input).
-    """
+    ``est_partials_per_key`` defaults to the largest partial row count of
+    one (key, spec) (cheap: the partials frame is tiny relative to the
+    input).  Every family's merge is a commutative semilattice/monoid on
+    the same serialized state the flat merge uses, so tree shape does not
+    change the result: for the byte-canonical families (exact or discrete
+    t-digest union, HLL register-max, Bloom bit-OR, CMS counter-sum, KMV
+    bottom-k, dd bucket-sum) the output blob is byte-identical to the flat
+    merge — pytest-proved — and for compressed t-digests, KLL and MG it is
+    within the family's documented merge bound."""
     if est_partials_per_key is None:
-        # one aggregation over the (small) partials frame
-        cnt = partials.groupBy(*keys).count().agg(F.max("count")).collect()[0][0]
+        cnt = (partials.groupBy(*keys, "sk_name").count()
+               .agg(F.max("count")).collect()[0][0])
         est_partials_per_key = int(cnt or 1)
 
     levels = max(0, math.ceil(math.log(max(est_partials_per_key, 1), fanin)) - 1)
@@ -66,75 +72,19 @@ def tree_merge_tdigest(
     n_salts = fanin ** levels
     while n_salts > 1:
         salted = add_salt(df, n_salts)
-        df = tdigest_merge(
-            salted, keys + ["_salt"], delta, discrete, compress=True
-        ).drop("_salt")
+        df = profile_merge(salted, keys + ["_salt"], specs).drop("_salt")
         n_salts //= fanin
-    return tdigest_merge(df, keys, delta, discrete, compress=True)
+    return profile_merge(df, keys, specs)
 
 
-def tree_merge_sketch(
-    partials: DataFrame,
-    keys: list[str],
-    sketch: str,
-    params: dict | None = None,
-    fanin: int = 64,
-    est_partials_per_key: int | None = None,
-) -> DataFrame:
-    """``tree_merge_tdigest`` for every sibling family in the
-    ``sketch_ops.SKETCHES`` registry: bounded reducer fan-in via salted
-    intermediate merge levels, same hot-key arithmetic as the module
-    docstring (P partial rows per key → levels of fan-in ``fanin``).
-
-    Every registry sketch's merge is a commutative semilattice/monoid on
-    the SAME serialized state the direct merge uses, so tree shape does
-    not change the result: for the byte-canonical families
-    (HLL register-max, Bloom bit-OR, CMS counter-sum, KMV bottom-k, dd
-    bucket-sum) the output blob is byte-identical to the flat
-    ``sketch_merge`` — pytest-proved — and for KLL/MG it is within the
-    family's documented merge bound."""
-    from sketchlib.spark.sketch_ops import sketch_merge
-
-    if est_partials_per_key is None:
-        cnt = partials.groupBy(*keys).count().agg(F.max("count")).collect()[0][0]
-        est_partials_per_key = int(cnt or 1)
-
-    levels = max(0, math.ceil(math.log(max(est_partials_per_key, 1), fanin)) - 1)
-    df = partials
-    n_salts = fanin ** levels
-    while n_salts > 1:
-        salted = add_salt(df, n_salts, blob_col="sketch")
-        df = sketch_merge(salted, keys + ["_salt"], sketch, params).drop("_salt")
-        n_salts //= fanin
-    return sketch_merge(df, keys, sketch, params)
-
-
-def sketch_aggregate_skewed(
+def aggregate_skewed(
     df: DataFrame,
     keys: list[str],
-    value_col: str,
-    sketch: str,
-    params: dict | None = None,
+    specs: list[dict],
     fanin: int = 64,
 ) -> DataFrame:
-    """Full skew-safe sibling-sketch plan: partials → salted tree merge."""
-    from sketchlib.spark.sketch_ops import sketch_partials
-
-    partials = sketch_partials(df, keys, value_col, sketch, params)
-    return tree_merge_sketch(partials, keys, sketch, params, fanin)
-
-
-def tdigest_aggregate_skewed(
-    df: DataFrame,
-    keys: list[str],
-    value_col: str,
-    delta: float = 0.01,
-    discrete: bool = False,
-    fanin: int = 64,
-) -> DataFrame:
-    """Full skew-safe plan: partials → salted tree merge → final digest."""
-    partials = tdigest_partials(df, keys, value_col, delta, discrete)
-    return tree_merge_tdigest(partials, keys, delta, discrete, fanin)
+    """Full skew-safe plan: ``profile_partials`` → salted tree merge."""
+    return tree_merge(profile_partials(df, keys, specs), keys, specs, fanin)
 
 
 def choose_salts_from_counts(df: DataFrame, key: str, rows_per_salt: int = 5_000_000,

@@ -1,12 +1,23 @@
-"""Generic DataFrame-level plan for any sketchlib Aggregator (HLL, CMS,
-Bloom, KLL — and t-digest, though tdigest_ops has a specialized path).
+"""The two-phase sketch plan: ONE DataFrame-level build for every sketchlib
+Aggregator family (t-digest, HLL, CMS, Bloom, KLL, KMV, MG, DDSketch).
 
-Same two-phase shape as tdigest_ops (mapInPandas partials → applyInPandas
-merge) — the shuffle carries one serialized sketch per (partition × key),
-never raw rows.
+  phase 1 — ``profile_partials``: one ``mapInPandas`` over a narrow JVM-side
+            projection; each Arrow batch is grouped by key ONCE and every
+            spec is updated from the same groups.  One partial sketch per
+            (input partition × key × spec); no shuffle.
+  phase 2 — ``profile_merge``: ``repartition(keys)`` (the one Exchange), then
+            one ``mapInPandas`` accumulator merges every (key, spec) of the
+            partition — one Python call per Arrow batch, not one per group.
 
-Hashing stays JVM-side: for hash-based sketches the plan projects
-``xxhash64(value)`` (whole-stage-codegen, no Python string hashing) and the
+The shuffle carries one serialized sketch per (partition × key × spec),
+never raw rows.  Output is LONG: ``keys + (sk_name, sketch)``.  A single
+family is the N = 1 case: ``sketch_partials``/``sketch_merge``/
+``sketch_aggregate`` here and ``tdigest_ops.tdigest_*`` narrow it to one
+blob column.  ``plan.tree_merge`` (salted levels) and the checkpointer reuse
+the same two phases.
+
+Hashing stays JVM-side: for ``ingest == "hashed"`` families the plan projects
+``xxhash64(value)`` (whole-stage codegen, no Python string hashing) and the
 Python worker ingests int64 via ``update_hashed`` — the pre-hash is remixed
 with the sketch seed so query paths agree (``query_hashed``/
 ``contains_hashed``).
@@ -28,20 +39,242 @@ from sketchlib.hll import HLL
 from sketchlib.kll import KLL
 from sketchlib.kmv import KMV
 from sketchlib.mg import MisraGries
+from sketchlib.tdigest.core import MergingDigest
 
-SKETCHES = {"hll": HLL, "cms": CMS, "bloom": Bloom, "kll": KLL, "kmv": KMV,
-            "mg": MisraGries, "dd": DDSketch}
-_HASHED = {"hll", "cms", "bloom", "kmv"}  # ingest xxhash64 int64; kll/dd ingest doubles
-_RAW = {"mg"}  # ingest the raw (string) item: the sketch must REPORT items back
-#: sketches whose serialized state stays ≤ tens of KB at any cardinality —
-#: their merge takes the repartition+mapInPandas accumulator path (one Python
-#: call per Arrow batch).  Bloom/CMS can be MB-scale per sketch, so they keep
-#: the groupBy().applyInPandas() path that materializes ONE group at a time.
-_SMALL_STATE = {"hll", "kmv", "mg", "kll", "dd"}
+#: every family the plan builds; a spec's ``kind`` is a key here
+SKETCHES = {"tdigest": MergingDigest, "hll": HLL, "cms": CMS, "bloom": Bloom,
+            "kll": KLL, "kmv": KMV, "mg": MisraGries, "dd": DDSketch}
 
 
 def _norm_key(key) -> tuple:
     return key if isinstance(key, tuple) else (key,)
+
+
+def _check_specs(specs: list[dict]) -> None:
+    names = [s["name"] for s in specs]
+    if len(set(names)) != len(names):
+        raise ValueError(f"duplicate spec names: {names}")
+    for s in specs:
+        if s["kind"] not in SKETCHES:
+            raise ValueError(f"unknown sketch kind {s['kind']!r} in spec {s['name']!r}")
+        if s.get("value_fn") is not None and SKETCHES[s["kind"]].ingest != "double":
+            raise ValueError(f"value_fn needs a double-ingest kind, not {s['kind']!r}")
+
+
+def _project(df: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
+    """The narrow JVM-side projection the builder reads: spec ``i``'s values
+    in ``_v{i}`` (pre-hash / casts run in whole-stage codegen), its weights
+    in ``_w{i}``; ``value_fn`` specs read their ``input_cols`` as they are."""
+    cols = [F.col(k) for k in keys]
+    passthrough: list[str] = []
+    for i, s in enumerate(specs):
+        if s.get("value_fn") is not None:
+            passthrough += [c for c in s.get("input_cols") or []
+                            if c not in keys and c not in passthrough]
+        elif SKETCHES[s["kind"]].ingest == "hashed":
+            # xxhash64(NULL) = seed (42), not NULL: the null mask rides as a
+            # separate boolean column (a nullable int64 would cross
+            # Arrow→pandas as float64 and mangle hash low bits) so NULLs are
+            # never ingested
+            cols += [F.xxhash64(s["col"]).alias(f"_v{i}"),
+                     F.col(s["col"]).isNull().alias(f"_m{i}")]
+        elif SKETCHES[s["kind"]].ingest == "string":
+            cols.append(F.col(s["col"]).cast("string").alias(f"_v{i}"))
+        else:
+            cols.append(F.col(s["col"]).cast("double").alias(f"_v{i}"))
+        if s.get("weight_col"):
+            cols.append(F.col(s["weight_col"]).cast("double").alias(f"_w{i}"))
+    return df.select(*cols, *passthrough)
+
+
+def _spec_vals(spec: dict, pdf: pd.DataFrame, i: int):
+    """(values, null mask or None, weights or None) of spec ``i`` in one
+    batch.  NULLs are never ingested: masked here for the hashed and string
+    kinds, dropped as NaN inside ``update_batch`` for the double kinds."""
+    w = (pdf[f"_w{i}"].to_numpy(dtype="float64", na_value=np.nan)
+         if spec.get("weight_col") else None)
+    if spec.get("value_fn") is not None:
+        return np.asarray(spec["value_fn"](pdf), dtype="float64"), None, w
+    series = pdf[f"_v{i}"]
+    ingest = SKETCHES[spec["kind"]].ingest
+    if ingest == "hashed":
+        m = pdf[f"_m{i}"].to_numpy(dtype=bool)
+        return series.to_numpy(dtype="int64").view(np.uint64), (m if m.any() else None), w
+    if ingest == "string":
+        vals = series.to_numpy(dtype=object)
+        m = pd.isna(vals)
+        return vals, (m if m.any() else None), w
+    return series.to_numpy(dtype="float64", na_value=np.nan), None, w
+
+
+def _fold(batches: Iterable[pd.DataFrame], keys: list[str], specs: list[dict]) -> dict:
+    """The partial builder: every batch of one partition into one sketch per
+    ``(key..., spec index)``.  NULL keys form their own group."""
+    classes = [SKETCHES[s["kind"]] for s in specs]
+    hashed = [cls.ingest == "hashed" for cls in classes]
+    params = [dict(s.get("params") or {}) for s in specs]
+    overrides = [getattr(s.get("params_by_key"), "value", s.get("params_by_key")) or {}
+                 for s in specs]
+    aggs: dict[tuple, object] = {}
+    for pdf in batches:
+        cols = [_spec_vals(s, pdf, i) for i, s in enumerate(specs)]
+        groups = (
+            pdf.groupby(keys, dropna=False, sort=False).indices.items()
+            if keys
+            else [((), np.arange(len(pdf)))]
+        )
+        for key, idx in groups:
+            key = _norm_key(key)
+            for i, (vals, mask, wts) in enumerate(cols):
+                agg = aggs.get(key + (i,))
+                if agg is None:
+                    p = {**params[i], **overrides[i].get(key, {})} if overrides[i] else params[i]
+                    agg = aggs[key + (i,)] = classes[i](**p)
+                v = vals[idx]
+                w = wts[idx] if wts is not None else None
+                if mask is not None:
+                    keep = ~mask[idx]
+                    v = v[keep]
+                    w = w[keep] if w is not None else None
+                if hashed[i]:
+                    agg.update_hashed(v)
+                elif w is not None:
+                    agg.update_batch(v, w)
+                else:
+                    agg.update_batch(v)
+    return aggs
+
+
+def _emit(aggs: dict, keys: list[str], specs: list[dict]) -> pd.DataFrame:
+    """One long-format frame from ``(key..., spec index) -> sketch``; each
+    spec's ``metrics`` (e.g. ``tdigest_ops.TDigestMetrics``) sees every
+    sketch it emits."""
+    rows = {name: [k[j] for k in aggs] for j, name in enumerate(keys)}
+    rows["sk_name"] = [specs[k[-1]]["name"] for k in aggs]
+    rows["sketch"] = [a.serialize() for a in aggs.values()]
+    for k, a in aggs.items():
+        metrics = specs[k[-1]].get("metrics")
+        if metrics is not None:
+            metrics.add_from(a)
+    return pd.DataFrame(rows, columns=keys + ["sk_name", "sketch"])
+
+
+def _long_schema(df: DataFrame, keys: list[str]) -> StructType:
+    return StructType(
+        [StructField(k, df.schema[k].dataType, True) for k in keys]
+        + [StructField("sk_name", StringType(), False),
+           StructField("sketch", BinaryType(), True)]
+    )
+
+
+def profile_partials(df: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
+    """Phase 1: ONE scan builds partials for EVERY spec — the corpus-profile
+    pattern.  A profile of S sketch families over K keys costs 1 scan + (in
+    ``profile_aggregate``) 1 shuffle of K·S KB-scale sketch rows; S
+    single-family builds would cost S scans + S shuffles.
+
+    A spec is a dict:
+
+    - ``name`` — its ``sk_name`` in the output (unique per plan);
+    - ``kind`` — a ``SKETCHES`` key; ``col`` — the value column;
+      ``params`` — constructor params (default ``{}``);
+    - ``value_fn`` + ``input_cols`` (optional, double-ingest kinds) — a
+      ``pd.DataFrame -> np.ndarray`` computing the values inside the same
+      Python stage from ``input_cols``, in place of ``col``: fuses upstream
+      vectorized work (e.g. html→text extraction) with ingest in ONE
+      JVM↔Python Arrow hop;
+    - ``weight_col`` (optional) — per-row weights, for families whose
+      ``update_batch`` takes them (the t-digest);
+    - ``params_by_key`` (optional) — per-group constructor overrides: a dict
+      (or ``sparkContext.broadcast`` of one, preferred when the key domain
+      is large) mapping the normalized key tuple to a params patch, e.g.
+      ``{("cnn.com",): {"expected_n": 48211}}``, so each group's sketch is
+      sized to ITS cardinality (S Bloom groups sized to the global row
+      count would each carry m ≈ n_total·9.6 bits);
+    - ``metrics`` (optional) — an object whose ``add_from(sketch)`` sees
+      every sketch the plan emits (``tdigest_ops.TDigestMetrics``).
+
+    Output is LONG format: ``keys + (sk_name string, sketch binary)``, one
+    row per (partition × key × spec); ``profile_pivot`` widens it.
+    """
+    from sketchlib.spark.shipping import ensure_on_workers
+
+    ensure_on_workers(df.sparkSession)
+    _check_specs(specs)
+    narrow = _project(df, keys, specs)
+
+    def build(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        aggs = _fold(batches, keys, specs)
+        if aggs:
+            yield _emit(aggs, keys, specs)
+
+    return narrow.mapInPandas(build, schema=_long_schema(narrow, keys))
+
+
+def profile_merge(partials: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
+    """Phase 2: ONE repartition on the keys co-locates every spec's partials
+    for a key; a mapInPandas accumulator merges per (key, spec) — one Python
+    call per Arrow batch, each family absorbing all of a key's blobs in the
+    batch at once (``Aggregator.absorb``: one byte-concat union for the
+    t-digest) and settling once at emit (the t-digest's one compress).
+    NULL blobs are the monoid identity.  Holds (keys-per-partition × specs)
+    sketches in memory at once: size specs accordingly (a dense MB-scale
+    Bloom per key wants more shuffle partitions)."""
+    from sketchlib.spark.shipping import ensure_on_workers
+
+    ensure_on_workers(partials.sparkSession)
+    _check_specs(specs)
+    classes = [SKETCHES[s["kind"]] for s in specs]
+    params = [dict(s.get("params") or {}) for s in specs]
+    index = {s["name"]: i for i, s in enumerate(specs)}
+    narrow = partials.select(*keys, "sk_name", "sketch")
+
+    def merge_stream(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        accs: dict[tuple, object] = {}  # (key..., spec index) -> sketch or None
+        for pdf in batches:
+            blobs = pdf["sketch"].to_numpy()
+            groups = pdf.groupby(keys + ["sk_name"], dropna=False, sort=False).indices
+            for gk, idx in groups.items():
+                gk = _norm_key(gk)
+                i = index[gk[-1]]
+                k = gk[:-1] + (i,)
+                accs[k] = classes[i].absorb(
+                    accs.get(k), [bytes(b) for b in blobs[idx] if b is not None],
+                    **params[i])
+        if accs:
+            for k, a in accs.items():
+                accs[k] = (classes[k[-1]](**params[k[-1]]) if a is None else a).settle()
+            yield _emit(accs, keys, specs)
+
+    shuffled = (
+        narrow.repartition(*[F.col(k) for k in keys])
+        if keys
+        else narrow.repartition(1)
+    )
+    return shuffled.mapInPandas(merge_stream, schema=_long_schema(narrow, keys))
+
+
+def profile_aggregate(df: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
+    """One scan + one shuffle → merged sketches for every spec (long format)."""
+    return profile_merge(profile_partials(df, keys, specs), keys, specs)
+
+
+# ---------------------------------------------------------------------------
+# Single family: the N = 1 case, narrowed to one blob column
+# ---------------------------------------------------------------------------
+
+
+def _one(profile: DataFrame, keys: list[str], col: str) -> DataFrame:
+    return profile.select(*keys, F.col("sketch").alias(col))
+
+
+def _long(partials: DataFrame, keys: list[str], name: str, col: str) -> DataFrame:
+    return partials.select(*keys, F.lit(name).alias("sk_name"),
+                           F.col(col).alias("sketch"))
+
+
+def _spec(sketch: str, params: dict | None, **fields) -> dict:
+    return {"name": sketch, "kind": sketch, "params": params, **fields}
 
 
 def sketch_partials(
@@ -52,86 +285,11 @@ def sketch_partials(
     params: dict | None = None,
     params_by_key=None,
 ) -> DataFrame:
-    """``params_by_key``: optional per-group constructor overrides — a dict
-    (or ``sparkContext.broadcast`` of one, preferred when the key domain is
-    large) mapping the normalized key tuple to a params patch, e.g.
-    ``{("cnn.com",): {"expected_n": 48211}}``.  Lets each group's sketch be
-    sized to ITS cardinality instead of the global row count — without it,
-    S Bloom groups each carry m ≈ n_total·9.6 bits and the collected filter
-    set is S× larger than needed (the 100-TB failure mode)."""
-    from sketchlib.spark.shipping import ensure_on_workers
-
-    ensure_on_workers(df.sparkSession)
-    cls = SKETCHES[sketch]
-    params = dict(params or {})
-    hashed = sketch in _HASHED
-    raw = sketch in _RAW
-    if hashed:
-        # NULL values are never ingested (SQL-aggregate semantics):
-        # Spark's xxhash64(NULL) returns the SEED (42), not NULL, so an
-        # unguarded projection would count every NULL as one phantom
-        # item.  The mask rides as a SEPARATE boolean column rather than
-        # a nullable hash column — a nullable int64 crosses Arrow→pandas
-        # as float64, which silently mangles the low bits of every hash
-        # in the batch.
-        narrow = df.select(
-            *keys,
-            F.xxhash64(value_col).alias("_v"),
-            F.col(value_col).isNull().alias("_vnull"),
-        )
-    elif raw:
-        narrow = df.select(*keys, F.col(value_col).cast("string").alias("_v"))
-    else:
-        narrow = df.select(*keys, F.col(value_col).cast("double").alias("_v"))
-    key_fields = [narrow.schema[k] for k in keys]
-    out_schema = StructType(
-        [StructField(f.name, f.dataType, True) for f in key_fields]
-        + [StructField("sketch", BinaryType(), True)]
-    )
-
-    def build(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        overrides = (
-            params_by_key.value
-            if hasattr(params_by_key, "value")
-            else (params_by_key or {})
-        )
-        aggs: dict[tuple, object] = {}
-        for pdf in batches:
-            mask = None  # True where the value is NULL (never ingested)
-            if hashed:
-                m = pdf["_vnull"].to_numpy(dtype=bool)
-                mask = m if m.any() else None
-                vals = pdf["_v"].to_numpy(dtype="int64").view(np.uint64)
-            elif raw:
-                vals = pdf["_v"].to_numpy(dtype=object)
-                m = pd.isna(vals)
-                mask = m if m.any() else None
-            else:
-                vals = pdf["_v"].to_numpy(dtype="float64", na_value=np.nan)
-            groups = (
-                pdf.groupby(keys, dropna=False, sort=False).indices.items()
-                if keys
-                else [((), np.arange(len(pdf)))]
-            )
-            for key, idx in groups:
-                key = _norm_key(key)
-                agg = aggs.get(key)
-                if agg is None:
-                    p = params if not overrides else {**params, **overrides.get(key, {})}
-                    agg = aggs[key] = cls(**p)
-                v = vals[idx]
-                if mask is not None:
-                    v = v[~mask[idx]]
-                if hashed:
-                    agg.update_hashed(v)
-                else:
-                    agg.update_batch(v)
-        if aggs:
-            rows = {name: [k[i] for k in aggs] for i, name in enumerate(keys)}
-            rows["sketch"] = [a.serialize() for a in aggs.values()]
-            yield pd.DataFrame(rows, columns=keys + ["sketch"])
-
-    return narrow.mapInPandas(build, schema=out_schema)
+    """Phase 1 for one family: keys + ``sketch`` per (partition × key).
+    ``params_by_key``: per-group constructor overrides (see
+    ``profile_partials``)."""
+    spec = _spec(sketch, params, col=value_col, params_by_key=params_by_key)
+    return _one(profile_partials(df, keys, [spec]), keys, "sketch")
 
 
 def sketch_merge(
@@ -140,83 +298,9 @@ def sketch_merge(
     sketch: str,
     params: dict | None = None,
 ) -> DataFrame:
-    """Phase 2 for sibling sketches — the path depends on the sketch's
-    state size:
-
-    * ``_SMALL_STATE`` kinds (HLL/KMV/MG/KLL, ≤ tens of KB each) take
-      tdigest_merge's repartition+mapInPandas accumulator: ONE Python call
-      per Arrow batch instead of one per GROUP.  At rollup/cube key
-      cardinalities (thousands of (key × hour) groups of a handful of
-      partials each) the per-group ``applyInPandas`` overhead dominates the
-      actual merging by an order of magnitude.
-    * Bloom/CMS keep ``groupBy().applyInPandas`` (one group materialized at
-      a time): a dense Bloom bitmap is MBs, so holding every co-located
-      key's sketch in one partition dict would blow memory at high key
-      cardinality; streaming groups sequentially bounds peak memory at one
-      sketch per task."""
-    from sketchlib.spark.shipping import ensure_on_workers
-
-    ensure_on_workers(partials.sparkSession)
-    cls = SKETCHES[sketch]
-    params = dict(params or {})
-    key_fields = [partials.schema[k] for k in keys]
-    out_schema = StructType(
-        [StructField(f.name, f.dataType, True) for f in key_fields]
-        + [StructField("sketch", BinaryType(), True)]
-    )
-
-    if sketch in _SMALL_STATE:
-
-        def merge_stream(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            accs: dict[tuple, object] = {}
-            for pdf in batches:
-                blobs = pdf["sketch"].to_numpy()
-                groups = (
-                    pdf.groupby(keys, dropna=False, sort=False).indices.items()
-                    if keys
-                    else [((), np.arange(len(pdf)))]
-                )
-                for key, idx in groups:
-                    key = _norm_key(key)
-                    acc = accs.get(key)
-                    for b in blobs[idx]:
-                        if b is None:
-                            continue
-                        s = cls.deserialize(bytes(b), **params)
-                        acc = s if acc is None else acc.merge(s)
-                    accs[key] = acc  # None stays None → zero sketch at emit
-            if accs:
-                rows = {name: [k[i] for k in accs] for i, name in enumerate(keys)}
-                rows["sketch"] = [
-                    (a if a is not None else cls(**params)).serialize()
-                    for a in accs.values()
-                ]
-                yield pd.DataFrame(rows, columns=keys + ["sketch"])
-
-        shuffled = (
-            partials.repartition(*[F.col(k) for k in keys])
-            if keys
-            else partials.repartition(1)
-        )
-        return shuffled.mapInPandas(merge_stream, schema=out_schema)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        it = (bytes(b) for b in pdf["sketch"] if b is not None)
-        acc = None
-        for b in it:
-            s = cls.deserialize(b, **params)
-            acc = s if acc is None else acc.merge(s)
-        if acc is None:
-            acc = cls(**params)
-        out = {k: [pdf[k].iloc[0]] for k in keys}
-        out["sketch"] = [acc.serialize()]
-        return pd.DataFrame(out, columns=keys + ["sketch"])
-
-    if keys:
-        return partials.groupBy(*keys).applyInPandas(merge_group, schema=out_schema)
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        lambda pdf: merge_group(pdf), schema=out_schema
-    )
+    """Phase 2 for one family: keys + the merged ``sketch``."""
+    long = _long(partials, keys, sketch, "sketch")
+    return _one(profile_merge(long, keys, [_spec(sketch, params)]), keys, "sketch")
 
 
 def sketch_aggregate(
@@ -227,10 +311,8 @@ def sketch_aggregate(
     params: dict | None = None,
     params_by_key=None,
 ) -> DataFrame:
-    return sketch_merge(
-        sketch_partials(df, keys, value_col, sketch, params, params_by_key),
-        keys, sketch, params,
-    )
+    spec = _spec(sketch, params, col=value_col, params_by_key=params_by_key)
+    return _one(profile_aggregate(df, keys, [spec]), keys, "sketch")
 
 
 def mg_items_udf():
@@ -238,8 +320,6 @@ def mg_items_udf():
     frequent-items summary into rows.  Post-aggregation only: runs on
     ≤|distinct keys| sketch rows, never row-scale data."""
     from pyspark.sql.types import ArrayType, LongType, StringType
-
-    from sketchlib.mg import MisraGries
 
     schema = ArrayType(StructType([
         StructField("item", StringType(), True),
@@ -260,205 +340,9 @@ def mg_items_udf():
     return f
 
 
-def mg_total_udf():
-    """binary(MG sketch) → long total ingested weight n (for the n/(m+1)
-    error bound)."""
-    from pyspark.sql.types import LongType
-
-    from sketchlib.mg import MisraGries
-
-    @F.pandas_udf(LongType())
-    def f(sk: pd.Series) -> pd.Series:
-        return pd.Series([
-            0 if b is None else MisraGries.deserialize(bytes(b)).n for b in sk
-        ])
-
-    return f
-
-
 # ---------------------------------------------------------------------------
 # One-pass multi-sketch profile
 # ---------------------------------------------------------------------------
-
-#: kinds usable in profile specs: every registry sketch plus the t-digest
-#: (which lives outside SKETCHES because tdigest_ops has a specialized path)
-_PROFILE_KINDS = set(SKETCHES) | {"tdigest"}
-
-
-def _spec_proj(spec: dict, i: int):
-    """JVM-side typed projection for one profile spec (pre-hash / cast
-    happens in whole-stage codegen, exactly like the single-sketch path)."""
-    kind, col = spec["kind"], spec["col"]
-    alias = f"_v{i}"
-    if kind in _HASHED:
-        # xxhash64(NULL) = seed (42), not NULL: the null mask rides as a
-        # separate boolean column (a nullable int64 would cross
-        # Arrow→pandas as float64 and mangle hash low bits) so NULLs are
-        # never ingested
-        return [F.xxhash64(col).alias(alias),
-                F.col(col).isNull().alias(f"_m{i}")]
-    if kind in _RAW:
-        return [F.col(col).cast("string").alias(alias)]
-    return [F.col(col).cast("double").alias(alias)]  # kll, tdigest
-
-
-def _spec_new(spec: dict):
-    from sketchlib.tdigest.core import MergingDigest
-
-    params = dict(spec.get("params") or {})
-    if spec["kind"] == "tdigest":
-        return MergingDigest(**params)
-    return SKETCHES[spec["kind"]](**params)
-
-
-def _spec_vals(spec: dict, pdf: pd.DataFrame, i: int):
-    """(values, null_mask_or_None) — NULLs are never ingested (hashed/raw
-    kinds; the double kinds drop NaN inside update_batch)."""
-    series = pdf[f"_v{i}"]
-    if spec["kind"] in _HASHED:
-        m = pdf[f"_m{i}"].to_numpy(dtype=bool)
-        vals = series.to_numpy(dtype="int64").view(np.uint64)
-        return vals, (m if m.any() else None)
-    if spec["kind"] in _RAW:
-        vals = series.to_numpy(dtype=object)
-        m = pd.isna(vals)
-        return vals, (m if m.any() else None)
-    return series.to_numpy(dtype="float64", na_value=np.nan), None
-
-
-def profile_partials(df: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
-    """ONE scan builds partials for EVERY spec: the corpus-profile pattern.
-
-    ``specs``: list of ``{"name": str, "col": str, "kind": str, "params":
-    dict}`` where kind ∈ sketch registry ∪ {"tdigest"}.  A profile of S
-    sketch families over K keys costs 1 scan + (in ``profile_aggregate``)
-    1 shuffle of K·S KB-scale sketch rows — the single-sketch path costs
-    S scans + S shuffles.  At 100 TB the scan IS the job; this is the
-    difference between one pass over the corpus and six.
-
-    Output is LONG format: ``keys + (sk_name string, sketch binary)``, one
-    row per (partition × key × spec); ``profile_pivot`` widens it.
-    Per-row ingest is the same vectorized batch path as the single-sketch
-    builders — no per-row Python.
-    """
-    from sketchlib.spark.shipping import ensure_on_workers
-
-    ensure_on_workers(df.sparkSession)
-    names = [s["name"] for s in specs]
-    if len(set(names)) != len(names):
-        raise ValueError(f"duplicate spec names: {names}")
-    for s in specs:
-        if s["kind"] not in _PROFILE_KINDS:
-            raise ValueError(f"unknown sketch kind {s['kind']!r} in spec {s['name']!r}")
-    narrow = df.select(
-        *keys,
-        *(e for i, s in enumerate(specs) for e in _spec_proj(s, i)),
-    )
-    key_fields = [narrow.schema[k] for k in keys]
-    out_schema = StructType(
-        [StructField(f.name, f.dataType, True) for f in key_fields]
-        + [StructField("sk_name", StringType(), False),
-           StructField("sketch", BinaryType(), True)]
-    )
-
-    def build(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        aggs: dict[tuple, object] = {}  # (key..., spec_idx) -> sketch
-        for pdf in batches:
-            vals = [_spec_vals(s, pdf, i) for i, s in enumerate(specs)]
-            groups = (
-                pdf.groupby(keys, dropna=False, sort=False).indices.items()
-                if keys
-                else [((), np.arange(len(pdf)))]
-            )
-            for key, idx in groups:
-                key = _norm_key(key)
-                for i, s in enumerate(specs):
-                    agg = aggs.get(key + (i,))
-                    if agg is None:
-                        agg = aggs[key + (i,)] = _spec_new(s)
-                    v, m = vals[i]
-                    v = v[idx]
-                    if m is not None:
-                        v = v[~m[idx]]
-                    if s["kind"] in _HASHED:
-                        agg.update_hashed(v)
-                    else:
-                        agg.update_batch(v)
-        if aggs:
-            rows = {name: [k[j] for k in aggs] for j, name in enumerate(keys)}
-            rows["sk_name"] = [specs[k[-1]]["name"] for k in aggs]
-            rows["sketch"] = [a.serialize() for a in aggs.values()]
-            yield pd.DataFrame(rows, columns=keys + ["sk_name", "sketch"])
-
-    return narrow.mapInPandas(build, schema=out_schema)
-
-
-def profile_merge(partials: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
-    """Phase 2: ONE repartition on the keys co-locates every spec's partials
-    for a key; a mapInPandas accumulator merges per (key, spec) — one Python
-    call per Arrow batch.  Holds (keys-per-partition × specs) sketches in
-    memory at once: size profile specs accordingly (KB-scale params; a dense
-    8 MB Bloom per spec belongs on the dedicated single-sketch path)."""
-    from sketchlib.spark.shipping import ensure_on_workers
-
-    from sketchlib.tdigest.core import MergingDigest
-
-    ensure_on_workers(partials.sparkSession)
-    by_name = {s["name"]: s for s in specs}
-    key_fields = [partials.schema[k] for k in keys]
-    out_schema = StructType(
-        [StructField(f.name, f.dataType, True) for f in key_fields]
-        + [StructField("sk_name", StringType(), False),
-           StructField("sketch", BinaryType(), True)]
-    )
-
-    def merge_stream(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        accs: dict[tuple, object] = {}  # (key..., name) -> sketch
-        for pdf in batches:
-            blobs = pdf["sketch"].to_numpy()
-            names_col = pdf["sk_name"].to_numpy()
-            groups = (
-                pdf.groupby(keys, dropna=False, sort=False).indices.items()
-                if keys
-                else [((), np.arange(len(pdf)))]
-            )
-            for key, idx in groups:
-                key = _norm_key(key)
-                for j in idx:
-                    b = blobs[j]
-                    if b is None:
-                        continue
-                    name = names_col[j]
-                    spec = by_name[name]
-                    params = dict(spec.get("params") or {})
-                    acc = accs.get(key + (name,))
-                    if spec["kind"] == "tdigest":
-                        if acc is None:
-                            acc = accs[key + (name,)] = MergingDigest(**params)
-                        acc.merge_bytes(bytes(b))
-                    else:
-                        s = SKETCHES[spec["kind"]].deserialize(bytes(b), **params)
-                        accs[key + (name,)] = s if acc is None else acc.merge(s)
-        if accs:
-            for k, a in accs.items():
-                if isinstance(a, MergingDigest):
-                    a.compress()
-            rows = {name: [k[j] for k in accs] for j, name in enumerate(keys)}
-            rows["sk_name"] = [k[-1] for k in accs]
-            rows["sketch"] = [a.serialize() for a in accs.values()]
-            yield pd.DataFrame(rows, columns=keys + ["sk_name", "sketch"])
-
-    shuffled = (
-        partials.repartition(*[F.col(k) for k in keys])
-        if keys
-        else partials.repartition(1)
-    )
-    return shuffled.mapInPandas(merge_stream, schema=out_schema)
-
-
-def profile_aggregate(df: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:
-    """One scan + one shuffle → merged sketches for every spec (long format)."""
-    return profile_merge(profile_partials(df, keys, specs), keys, specs)
 
 
 def profile_pivot(profile: DataFrame, keys: list[str], specs: list[dict]) -> DataFrame:

@@ -556,12 +556,12 @@ def streaming_sketch(
     """
     import numpy as np
 
-    from sketchlib.spark.sketch_ops import _HASHED, _RAW, SKETCHES
+    from sketchlib.spark.sketch_ops import SKETCHES
 
     cls = SKETCHES[sketch]
     params = dict(params or {})
-    hashed = sketch in _HASHED
-    raw = sketch in _RAW  # mg: the sketch must report raw items back
+    hashed = cls.ingest == "hashed"
+    raw = cls.ingest == "string"  # mg: the sketch must report raw items back
 
     def restore(blob: bytes | None):
         return cls.deserialize(blob, **params) if blob else cls(**params)

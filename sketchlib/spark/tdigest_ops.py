@@ -5,17 +5,18 @@ aggregation automatically only to built-in aggregates; a pandas GROUPED_AGG
 UDF shuffles *all group rows* to one reducer — unacceptable at 10^12 rows
 and under key skew.  So we make the reference's partial/final split
 (reference README.md:31-41 delegates it to SQL ``STRING_AGG`` + ``of_string``)
-explicit:
+explicit.  The t-digest is one family of the shared plan in
+``sketchlib.spark.sketch_ops``; the builders here are its N = 1 case:
 
   phase 1 — ``tdigest_partials``: ``mapInPandas`` over a narrow projection;
             one partial digest per (input partition × key).  Pure map side,
             no shuffle; the Arrow batches feed ``MergingDigest.update_batch``
             (vectorized numpy, no per-row Python).
-  phase 2 — ``tdigest_merge``: ``groupBy(keys).applyInPandas``; each group
-            merges its ≤ P partial digests by byte-concatenation (a concat of
-            serialized digests IS a valid digest) + one deterministic
-            compress.  Shuffle volume is P × |keys| × ≤40 KB — independent of
-            row count.
+  phase 2 — ``tdigest_merge``: ``repartition(keys)`` + one ``mapInPandas``
+            accumulator; each key's partial digests merge by
+            byte-concatenation (a concat of serialized digests IS a valid
+            digest) + one deterministic compress.  Shuffle volume is
+            P × |keys| × ≤40 KB — independent of row count.
 
 Skew: the shuffle carries one small row per (partition, key), so a hot key
 costs its reducer P×40 KB, not its row share of 100 TB.  For extreme P,
@@ -43,6 +44,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from sketchlib.spark.sketch_ops import (
+    _long,
+    _norm_key,
+    _one,
+    profile_aggregate,
+    profile_merge,
+    profile_partials,
+)
 from sketchlib.tdigest.core import (
     MergingDigest,
     bytes_to_centroids,
@@ -55,19 +64,16 @@ from sketchlib.tdigest.core import (
 )
 
 
-def _norm_key(key) -> tuple:
-    return key if isinstance(key, tuple) else (key,)
-
-
 class TDigestMetrics:
     """The reference's engine counters (``info.cumulates_count`` /
     ``compress_count`` / ``auto_compress_count``, src/tdigest.ml:42-58,
     161-168) surfaced operationally as Spark ACCUMULATORS — the SURVEY §1.1
     promise that counters become metrics rows.  Pass one to
-    ``tdigest_partials`` / ``tdigest_merge`` / ``tdigest_aggregate``; every
-    worker adds its digests' counters as it emits them, and after an action
-    ``snapshot()`` on the driver reads the cluster-wide totals (Python
-    accumulator updates flow back with task completion).
+    ``tdigest_partials`` / ``tdigest_merge`` / ``tdigest_aggregate`` (or as
+    a profile spec's ``metrics``); every worker adds its digests' counters
+    as it emits them, and after an action ``snapshot()`` on the driver reads
+    the cluster-wide totals (Python accumulator updates flow back with task
+    completion).
 
     CAVEAT: updates happen inside transformations, so Spark's exactly-once
     accumulator guarantee does not apply — a retried or speculatively
@@ -94,6 +100,11 @@ class TDigestMetrics:
         }
 
 
+def _td_spec(delta: float, discrete: bool, **fields) -> dict:
+    return {"name": "digest", "kind": "tdigest",
+            "params": {"delta": delta, "discrete": discrete}, **fields}
+
+
 def tdigest_partials(
     df: DataFrame,
     keys: list[str],
@@ -105,65 +116,16 @@ def tdigest_partials(
     input_cols: list[str] | None = None,
     metrics: TDigestMetrics | None = None,
 ) -> DataFrame:
-    """Phase 1: one partial digest row per (input partition × key).
-
-    Narrow-projects first so parquet column pruning happens before the
-    Python stage.
+    """Phase 1: keys + one partial ``digest`` per (input partition × key).
 
     ``value_fn``: optional ``pd.DataFrame -> np.ndarray`` computing the
-    values inside the same Python stage (reads ``input_cols``).  This fuses
-    upstream vectorized work — e.g. html→text extraction — with sketch
-    ingest in ONE JVM↔Python Arrow hop instead of two.
+    values inside the same Python stage (reads ``input_cols``) — fuses
+    upstream vectorized work, e.g. html→text extraction, with sketch ingest
+    in ONE JVM↔Python Arrow hop instead of two.
     """
-    from sketchlib.spark.shipping import ensure_on_workers
-
-    ensure_on_workers(df.sparkSession)
-    if value_fn is None:
-        cols = keys + [value_col] + ([weight_col] if weight_col else [])
-    else:
-        cols = keys + list(input_cols or []) + ([weight_col] if weight_col else [])
-    narrow = df.select(*cols)
-    key_fields = [narrow.schema[k] for k in keys]
-    out_schema = StructType(
-        [StructField(f.name, f.dataType, True) for f in key_fields]
-        + [StructField("digest", BinaryType(), True)]
-    )
-
-    def build(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        aggs: dict[tuple, MergingDigest] = {}
-        for pdf in batches:
-            if value_fn is not None:
-                vals = np.asarray(value_fn(pdf), dtype="float64")
-            else:
-                vals = pdf[value_col].to_numpy(dtype="float64", na_value=np.nan)
-            wts = (
-                pdf[weight_col].to_numpy(dtype="float64", na_value=np.nan)
-                if weight_col
-                else None
-            )
-            if keys:
-                for key, idx in pdf.groupby(keys, dropna=False, sort=False).indices.items():
-                    key = _norm_key(key)
-                    agg = aggs.get(key)
-                    if agg is None:
-                        agg = aggs[key] = MergingDigest(delta=delta, discrete=discrete)
-                    agg.update_batch(vals[idx], wts[idx] if wts is not None else None)
-            else:
-                agg = aggs.get(())
-                if agg is None:
-                    agg = aggs[()] = MergingDigest(delta=delta, discrete=discrete)
-                agg.update_batch(vals, wts)
-        if aggs:
-            rows = {
-                name: [k[i] for k in aggs] for i, name in enumerate(keys)
-            }
-            rows["digest"] = [a.serialize() for a in aggs.values()]
-            if metrics is not None:
-                for a in aggs.values():
-                    metrics.add_from(a)
-            yield pd.DataFrame(rows, columns=keys + ["digest"])
-
-    return narrow.mapInPandas(build, schema=out_schema)
+    spec = _td_spec(delta, discrete, col=value_col, weight_col=weight_col,
+                    value_fn=value_fn, input_cols=input_cols, metrics=metrics)
+    return _one(profile_partials(df, keys, [spec]), keys, "digest")
 
 
 def tdigest_merge(
@@ -171,63 +133,13 @@ def tdigest_merge(
     keys: list[str],
     delta: float = 0.01,
     discrete: bool = False,
-    compress: bool = True,
-    digest_col: str = "digest",
     metrics: TDigestMetrics | None = None,
 ) -> DataFrame:
-    """Phase 2: merge partial digests per key (byte-concat union + one
-    deterministic compress).  Empty-digest partials are the monoid identity.
-
-    Plan: ``repartition(keys)`` (the one Exchange — hash co-location of each
-    key) then ONE ``mapInPandas`` that merges every key group inside the
-    partition.  Semantically identical to ``groupBy.applyInPandas`` (concat
-    order never matters: the payload union sorts/sums by mean), but pays one
-    Python call per Arrow batch instead of one per GROUP — the difference
-    between 150 and 10^6 keys per partition at rollup/cube cardinalities.
-    A key's rows can span Arrow batches, so results accumulate in a
-    per-partition dict and emit once at end-of-partition, exactly like the
-    phase-1 builder."""
-    from sketchlib.spark.shipping import ensure_on_workers
-
-    ensure_on_workers(partials.sparkSession)
-    key_fields = [partials.schema[k] for k in keys]
-    out_schema = StructType(
-        [StructField(f.name, f.dataType, True) for f in key_fields]
-        + [StructField("digest", BinaryType(), True)]
-    )
-
-    def merge_partition(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, MergingDigest] = {}
-        for pdf in batches:
-            blobs = pdf[digest_col].to_numpy()
-            if keys:
-                groups = pdf.groupby(keys, dropna=False, sort=False).indices.items()
-            else:
-                groups = [((), np.arange(len(pdf)))]
-            for key, idx in groups:
-                key = _norm_key(key)
-                d = acc.get(key)
-                if d is None:
-                    d = acc[key] = MergingDigest(delta=delta, discrete=discrete)
-                blob = b"".join(bytes(b) for b in blobs[idx] if b is not None)
-                if blob:
-                    d.merge_bytes(blob)
-        if acc:
-            if compress:
-                for d in acc.values():
-                    d.compress()
-            rows = {name: [k[i] for k in acc] for i, name in enumerate(keys)}
-            rows["digest"] = [d.serialize() for d in acc.values()]
-            if metrics is not None:
-                for d in acc.values():
-                    metrics.add_from(d)
-            yield pd.DataFrame(rows, columns=keys + ["digest"])
-
-    if keys:
-        shuffled = partials.repartition(*[F.col(k) for k in keys])
-    else:
-        shuffled = partials.repartition(1)
-    return shuffled.mapInPandas(merge_partition, schema=out_schema)
+    """Phase 2: keys + the merged ``digest`` (byte-concat union + one
+    deterministic compress).  Empty or NULL partials are the identity."""
+    spec = _td_spec(delta, discrete, metrics=metrics)
+    return _one(profile_merge(_long(partials, keys, "digest", "digest"), keys, [spec]),
+                keys, "digest")
 
 
 def tdigest_aggregate(
@@ -237,14 +149,12 @@ def tdigest_aggregate(
     delta: float = 0.01,
     discrete: bool = False,
     weight_col: str | None = None,
-    compress: bool = True,
     metrics: TDigestMetrics | None = None,
 ) -> DataFrame:
     """The full two-phase plan: keys + a final ``digest`` binary column."""
-    partials = tdigest_partials(df, keys, value_col, delta, discrete, weight_col,
-                                metrics=metrics)
-    return tdigest_merge(partials, keys, delta, discrete, compress,
-                         metrics=metrics)
+    spec = _td_spec(delta, discrete, col=value_col, weight_col=weight_col,
+                    metrics=metrics)
+    return _one(profile_aggregate(df, keys, [spec]), keys, "digest")
 
 
 # ---------------------------------------------------------------------------

@@ -47,6 +47,8 @@ from typing import Iterable, Sequence
 
 import numpy as np
 
+from sketchlib.aggregator import Aggregator
+
 DEFAULT_DELTA = 0.01
 DEFAULT_K = 25.0
 DEFAULT_CX = 1.1
@@ -885,7 +887,7 @@ class TDigest:
 # ---------------------------------------------------------------------------
 
 
-class MergingDigest:
+class MergingDigest(Aggregator):
     """Vectorized t-digest for Arrow-batch aggregation on Spark.
 
     Ingest: numpy batches are buffered; when the buffer exceeds
@@ -937,6 +939,10 @@ class MergingDigest:
         self.auto_compress_count = 0
 
     # -- Aggregator interface -------------------------------------------------
+
+    @classmethod
+    def zero(cls, **params) -> "MergingDigest":
+        return cls(**params)
 
     def update_batch(self, values: np.ndarray, weights: np.ndarray | None = None) -> None:
         v = np.asarray(values, dtype=np.float64)
@@ -999,6 +1005,23 @@ class MergingDigest:
             [(self._means, self._ns), bytes_to_centroids(data)]
         )
         return self
+
+    @classmethod
+    def absorb(cls, acc: "MergingDigest | None", blobs, **params) -> "MergingDigest":
+        """All of a key's partial blobs in ONE lossless union: a byte
+        concatenation of serialized digests is itself a valid digest."""
+        if acc is None:
+            acc = cls(**params)
+        data = b"".join(blobs)
+        if data:
+            acc.merge_bytes(data)
+        return acc
+
+    def settle(self) -> "MergingDigest":
+        return self.compress()
+
+    def finish(self) -> bytes:
+        return self.compress().serialize()
 
     def compress(self, delta: float | None = None) -> "MergingDigest":
         """Deterministic final compression (idempotent for a fixed multiset)."""

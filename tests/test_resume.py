@@ -67,79 +67,76 @@ def test_checkpoint_rows_carry_lineage_and_metrics(spark, docs, tmp_path):
     assert per_part == docs.count()
 
 
-def test_tree_merge_equals_flat_merge_exact_mode(spark, docs):
-    from sketchlib.spark.plan import tdigest_aggregate_skewed, tree_merge_tdigest
-    from sketchlib.spark.tdigest_ops import tdigest_aggregate, tdigest_partials
+def _tree_vs_flat(docs, specs, fanin):
+    """Flat ``profile_aggregate`` blobs, and assert ``tree_merge`` over 32
+    input partitions and ``aggregate_skewed`` reproduce them byte-for-byte."""
+    from sketchlib.spark.plan import aggregate_skewed, tree_merge
+    from sketchlib.spark.sketch_ops import profile_aggregate, profile_partials
 
-    flat = {
+    def blobs(df):
+        return {(r["lang"], r["sk_name"]): bytes(r["sketch"]) for r in df.collect()}
+
+    flat = blobs(profile_aggregate(docs, ["lang"], specs))
+    assert {name for _, name in flat} == {s["name"] for s in specs}
+    partials = profile_partials(docs.repartition(32), ["lang"], specs)
+    tree = blobs(tree_merge(partials, ["lang"], specs, fanin=fanin))
+    skewed = blobs(aggregate_skewed(docs.repartition(32), ["lang"], specs, fanin=fanin))
+    for key, blob in flat.items():
+        assert tree[key] == blob, key
+        assert skewed[key] == blob, key
+    assert set(tree) == set(skewed) == set(flat)
+    return flat
+
+
+def test_tree_merge_equals_flat_merge_exact_mode(spark, docs):
+    """Exact-mode t-digests (``delta=0.0`` and discrete) through the salted
+    tree merge equal the flat ``tdigest_aggregate`` byte-for-byte."""
+    from sketchlib.spark.tdigest_ops import tdigest_aggregate
+
+    specs = [
+        {"name": "td", "kind": "tdigest", "col": "n_chars", "params": {"delta": 0.0}},
+        {"name": "td_disc", "kind": "tdigest", "col": "n_chars",
+         "params": {"discrete": True}},
+    ]
+    flat = _tree_vs_flat(docs, specs, fanin=4)
+    want = {
         r["lang"]: bytes(r["digest"])
         for r in tdigest_aggregate(docs, ["lang"], "n_chars", delta=0.0).collect()
     }
-    partials = tdigest_partials(docs.repartition(32), ["lang"], "n_chars", delta=0.0)
-    tree = {
-        r["lang"]: bytes(r["digest"])
-        for r in tree_merge_tdigest(partials, ["lang"], delta=0.0, fanin=4).collect()
-    }
-    assert tree == flat
-    skewed = {
-        r["lang"]: bytes(r["digest"])
-        for r in tdigest_aggregate_skewed(
-            docs.repartition(32), ["lang"], "n_chars", delta=0.0, fanin=4
-        ).collect()
-    }
-    assert skewed == flat
+    assert {lang: b for (lang, name), b in flat.items() if name == "td"} == want
 
 
 def test_tree_merge_sketch_byte_equal_families(spark, docs):
-    """Generic salted tree merge == flat sketch_merge, byte-for-byte, for
-    every byte-canonical sibling family (HLL register-max, Bloom bit-OR,
-    CMS counter-sum, KMV bottom-k, dd bucket-sum) at fan-in 2 over 32
-    input partitions (forces multiple salted levels)."""
-    from sketchlib.spark.plan import sketch_aggregate_skewed, tree_merge_sketch
-    from sketchlib.spark.sketch_ops import sketch_aggregate, sketch_partials
-
-    for kind, col, params in (
-        ("hll", "doc_id", {"p": 12}),
-        ("bloom", "doc_id", {"expected_n": 20_000, "fpr": 0.01}),
-        ("cms", "doc_id", {"width": 2048, "depth": 5}),
-        ("kmv", "doc_id", {"k": 256}),
-        ("dd", "n_chars", {"alpha": 0.01, "max_bins": 2048}),
-    ):
-        flat = {
-            r["lang"]: bytes(r["sketch"])
-            for r in sketch_aggregate(docs, ["lang"], col, kind, params).collect()
-        }
-        partials = sketch_partials(
-            docs.repartition(32), ["lang"], col, kind, params
-        )
-        tree = {
-            r["lang"]: bytes(r["sketch"])
-            for r in tree_merge_sketch(
-                partials, ["lang"], kind, params, fanin=2
-            ).collect()
-        }
-        assert tree == flat, kind
-        skewed = {
-            r["lang"]: bytes(r["sketch"])
-            for r in sketch_aggregate_skewed(
-                docs.repartition(32), ["lang"], col, kind, params, fanin=2
-            ).collect()
-        }
-        assert skewed == flat, kind
+    """Salted tree merge == flat merge, byte-for-byte, for every
+    byte-canonical sibling family in one spec list (HLL register-max, Bloom
+    bit-OR, CMS counter-sum, KMV bottom-k, dd bucket-sum) at fan-in 2 over
+    32 input partitions (forces multiple salted levels)."""
+    specs = [
+        {"name": "hll", "kind": "hll", "col": "doc_id", "params": {"p": 12}},
+        {"name": "bloom", "kind": "bloom", "col": "doc_id",
+         "params": {"expected_n": 20_000, "fpr": 0.01}},
+        {"name": "cms", "kind": "cms", "col": "doc_id", "params": {"width": 2048, "depth": 5}},
+        {"name": "kmv", "kind": "kmv", "col": "doc_id", "params": {"k": 256}},
+        {"name": "dd", "kind": "dd", "col": "n_chars",
+         "params": {"alpha": 0.01, "max_bins": 2048}},
+    ]
+    _tree_vs_flat(docs, specs, fanin=2)
 
 
 def test_tree_merge_compressed_within_bound(spark, docs):
     import numpy as np
 
     import duckdb
-    from sketchlib.spark.plan import tdigest_aggregate_skewed
+    from sketchlib.spark.plan import aggregate_skewed
     from sketchlib.spark.tdigest_ops import tdigest_quantiles_udf
 
-    dig = tdigest_aggregate_skewed(
-        docs.repartition(32), ["lang"], "n_chars", delta=0.01, fanin=4
+    dig = aggregate_skewed(
+        docs.repartition(32), ["lang"],
+        [{"name": "td", "kind": "tdigest", "col": "n_chars", "params": {"delta": 0.01}}],
+        fanin=4,
     )
     q = tdigest_quantiles_udf([0.5, 0.99])
-    rows = dig.withColumn("qs", q("digest")).collect()
+    rows = dig.withColumn("qs", q("sketch")).collect()
     for r in rows:
         vals = np.sort(
             duckdb.sql(
@@ -314,3 +311,69 @@ def test_wrong_checkpoint_format_raises_not_restarts(spark, docs, tmp_path):
                               table_format="orc", **kw)
     with pytest.raises(ValueError, match="unreadable"):
         bad.completed_parts()
+
+
+@pytest.fixture(scope="module")
+def nully(spark):
+    """200 rows: 80 de, 80 en, 40 NULL-lang; every 5th ``item`` NULL."""
+    rows = [
+        (i, None if i % 5 == 0 else ("de" if i % 2 else "en"),
+         float(i % 17), None if i % 5 == 1 else f"u{i % 7}")
+        for i in range(200)
+    ]
+    return spark.createDataFrame(rows, "id long, lang string, v double, item string")
+
+
+def test_checkpoint_keeps_null_key_rows(spark, nully, tmp_path):
+    """A NULL key is a group of its own in the checkpointer too: per-key
+    total weight equals ``tdigest_aggregate``'s, NULL group included."""
+    from sketchlib.spark.checkpoint import TDigestCheckpointer
+    from sketchlib.spark.tdigest_ops import tdigest_aggregate
+    from sketchlib.tdigest.core import MergingDigest
+
+    want = {r["lang"]: MergingDigest.deserialize(bytes(r["digest"])).count
+            for r in tdigest_aggregate(nully, ["lang"], "v", discrete=True).collect()}
+    assert want == {"de": 80.0, "en": 80.0, None: 40.0}
+    ck = TDigestCheckpointer(spark, str(tmp_path / "nk"), ["lang"], "v", "id",
+                             n_parts=4, discrete=True)
+    assert ck.run(nully) == 4
+    got = {r["key"]: MergingDigest.deserialize(bytes(r["digest"])).count
+           for r in ck.finalize().collect()}
+    assert got == want
+
+
+def test_checkpoint_hashed_kinds_never_ingest_null(spark, nully, tmp_path):
+    """``xxhash64(NULL)`` is the seed, not NULL: the checkpointer must mask
+    NULL values like the batch path, so its HLL equals ``sketch_aggregate``'s
+    byte for byte."""
+    from sketchlib.spark.checkpoint import TDigestCheckpointer
+    from sketchlib.spark.sketch_ops import sketch_aggregate
+
+    want = {r["lang"]: bytes(r["sketch"]) for r in
+            sketch_aggregate(nully, ["lang"], "item", "hll", {"p": 12}).collect()}
+    ck = TDigestCheckpointer(spark, str(tmp_path / "hn"), ["lang"], "item", "id",
+                             n_parts=4, sketch="hll", params={"p": 12})
+    ck.run(nully)
+    got = {r["key"]: bytes(r["digest"]) for r in ck.finalize().collect()}
+    assert got == want
+
+
+def test_checkpoint_mg_ingests_strings(spark, nully, tmp_path):
+    """MG reports items back, so the checkpointer must feed it the value as
+    a string (a double cast fails on string items), and finalize to the
+    batch path's exact counts."""
+    from sketchlib.mg import MisraGries
+    from sketchlib.spark.checkpoint import TDigestCheckpointer
+    from sketchlib.spark.sketch_ops import sketch_aggregate
+
+    def items(blob):
+        return dict(MisraGries.deserialize(blob).items())
+
+    want = {r["lang"]: items(bytes(r["sketch"])) for r in
+            sketch_aggregate(nully, ["lang"], "item", "mg", {"m": 16}).collect()}
+    ck = TDigestCheckpointer(spark, str(tmp_path / "mg"), ["lang"], "item", "id",
+                             n_parts=4, sketch="mg", params={"m": 16})
+    ck.run(nully)
+    got = {r["key"]: items(bytes(r["digest"])) for r in ck.finalize().collect()}
+    assert got == want
+    assert sum(want["de"].values()) == 60  # 80 rows, 20 NULL items

@@ -69,6 +69,32 @@ def main():
     if n_exch != 1:
         FAIL.append(f"two-phase agg: {n_exch} shuffles, want 1")
 
+    # 3b. every family takes the ONE shared plan: a keyed Bloom build (the
+    # MB-scale family that once forked to groupBy().applyInPandas) and a
+    # 4-spec profile each show exactly one Exchange and no grouped-Pandas
+    # merge
+    from sketchlib.spark.sketch_ops import profile_aggregate, sketch_aggregate
+
+    plans = {
+        "keyed bloom sketch_aggregate": sketch_aggregate(
+            docs, ["lang"], "doc_id", "bloom", {"expected_n": 20_000, "fpr": 0.01}),
+        "4-spec profile_aggregate": profile_aggregate(docs, ["lang"], [
+            {"name": "td", "kind": "tdigest", "col": "n_chars", "params": {}},
+            {"name": "hll", "kind": "hll", "col": "doc_id", "params": {"p": 12}},
+            {"name": "bloom", "kind": "bloom", "col": "doc_id",
+             "params": {"expected_n": 20_000}},
+            {"name": "cms", "kind": "cms", "col": "source", "params": {}},
+        ]),
+    }
+    for name, df in plans.items():
+        p = plan_of(df)
+        n_exch = len(re.findall(r"\(\d+\) Exchange", p))
+        check(f"{name}: 1 Exchange", p, must=[r"MapInPandas"],
+              must_not=[r"FlatMapGroupsInPandas"])
+        if n_exch != 1:
+            print(f"{name + ': exchange count':40s} FAIL ({n_exch})")
+            FAIL.append(f"{name}: {n_exch} Exchanges, want 1")
+
     # 4. lang-ID: profile join is broadcast, tokens never shuffle with text
     from sketchlib.spark.textops import lang_id_confusion
 
