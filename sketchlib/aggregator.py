@@ -13,7 +13,9 @@ the contract Spark's two-phase aggregation needs:
 
 ``sketchlib.spark.sketch_ops`` lifts any Aggregator into ONE DataFrame-level
 partial/merge plan (mapInPandas partials + repartition + mapInPandas merge);
-the class attributes and hooks below are all that plan knows of a family.
+the class attributes and hooks below are all that plan — and the streaming
+operators and SQL aggregates built on its ingest and merge — know of a
+family.
 """
 
 from __future__ import annotations

@@ -107,11 +107,29 @@ def _spec_vals(spec: dict, pdf: pd.DataFrame, i: int):
     return series.to_numpy(dtype="float64", na_value=np.nan), None, w
 
 
+def _update(agg, vals, mask, wts, idx) -> None:
+    """Update ``agg`` with rows ``idx`` of one spec's ``_spec_vals``: masked
+    NULLs dropped, hashed kinds through ``update_hashed``, weights when the
+    spec has them.  The one ingest dispatch of every surface (plan partials,
+    streaming state)."""
+    v = vals[idx]
+    w = wts[idx] if wts is not None else None
+    if mask is not None:
+        keep = ~mask[idx]
+        v = v[keep]
+        w = w[keep] if w is not None else None
+    if agg.ingest == "hashed":
+        agg.update_hashed(v)
+    elif w is not None:
+        agg.update_batch(v, w)
+    else:
+        agg.update_batch(v)
+
+
 def _fold(batches: Iterable[pd.DataFrame], keys: list[str], specs: list[dict]) -> dict:
     """The partial builder: every batch of one partition into one sketch per
     ``(key..., spec index)``.  NULL keys form their own group."""
     classes = [SKETCHES[s["kind"]] for s in specs]
-    hashed = [cls.ingest == "hashed" for cls in classes]
     params = [dict(s.get("params") or {}) for s in specs]
     overrides = [getattr(s.get("params_by_key"), "value", s.get("params_by_key")) or {}
                  for s in specs]
@@ -125,23 +143,12 @@ def _fold(batches: Iterable[pd.DataFrame], keys: list[str], specs: list[dict]) -
         )
         for key, idx in groups:
             key = _norm_key(key)
-            for i, (vals, mask, wts) in enumerate(cols):
+            for i, col in enumerate(cols):
                 agg = aggs.get(key + (i,))
                 if agg is None:
                     p = {**params[i], **overrides[i].get(key, {})} if overrides[i] else params[i]
                     agg = aggs[key + (i,)] = classes[i](**p)
-                v = vals[idx]
-                w = wts[idx] if wts is not None else None
-                if mask is not None:
-                    keep = ~mask[idx]
-                    v = v[keep]
-                    w = w[keep] if w is not None else None
-                if hashed[i]:
-                    agg.update_hashed(v)
-                elif w is not None:
-                    agg.update_batch(v, w)
-                else:
-                    agg.update_batch(v)
+                _update(agg, *col, idx)
     return aggs
 
 

@@ -9,424 +9,214 @@
         FROM docs GROUP BY lang
     ''')
 
-``tdigest_agg`` here is a pandas GROUPED_AGG UDF — convenient for ad-hoc
-SQL, but Catalyst gives GROUPED_AGG UDFs **no partial aggregation**: every
-group's rows shuffle to one reducer.  For production scale use the explicit
-two-phase plan (``sketchlib.spark.tdigest_ops.tdigest_aggregate``); this
-module is the interactive/BI convenience layer over the same wire format,
-so digests built either way are interchangeable (``tdigest_merge_agg``
-merges stored digest columns by byte concat).
+Every family in ``sketch_ops.SKETCHES`` gets ``<kind>_agg`` (build a sketch
+from a value column) and ``<kind>_merge_agg`` (merge a column of stored
+sketches), both generated from the family's own ``Aggregator`` hooks: the
+build drops NULLs and ingests per ``cls.ingest``, the merge is
+``cls.absorb`` (all NULL blobs: the identity sketch), and both ``settle()``
+before serializing.  Parameters come from ``SQL_PARAMS``; the t-digest's
+``delta`` is ``register_sql_functions``' argument.  The two-digest t-digest
+functions (``tdigest_ks``/``w1``/``psi_jsd``/``size``/``count``/
+``to_wire``/``from_wire``) are the ``tdigest_ops`` UDFs registered under SQL
+names, so SQL and DataFrame answers are the same code.
+
+The aggregates are pandas GROUPED_AGG UDFs — convenient for ad-hoc SQL, but
+Catalyst gives GROUPED_AGG UDFs **no partial aggregation**: every group's
+rows shuffle to one reducer.  For production scale use the explicit
+two-phase plan (``sketchlib.spark.sketch_ops.profile_aggregate`` and its
+N = 1 wrappers); this module is the interactive/BI convenience layer over
+the same wire formats, so sketches built either way are interchangeable
+(``<kind>_merge_agg`` merges stored sketch columns).
+
+Hashed families (hll, cms, bloom, kmv) hash the argument's int64 value.  A
+nullable BIGINT group that holds a NULL reaches the pandas UDAF as float64,
+so distinct values above 2^53 can collide before hashing (measured:
+``2^60+1`` and ``2^60+3`` arrive as the same float, and ``hll_agg`` over
+them plus a NULL estimates 1).  Feed the hashed aggregates NULL-free
+columns (``WHERE x IS NOT NULL``); pre-hash other types with
+``xxhash64(x)`` after filtering NULLs (``xxhash64(NULL)`` is 42, not NULL).
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import ArrayType, BinaryType, DoubleType, IntegerType
+from pyspark.sql.types import BinaryType, BooleanType, DoubleType, LongType
 
+from sketchlib.cms import CMS
+from sketchlib.spark.sketch_ops import SKETCHES
 from sketchlib.tdigest.core import (
-    MergingDigest,
     bytes_to_centroids,
     cdf_of_centroids,
-    centroids_to_bytes,
-    merge_centroid_arrays,
-    parse_tdigest_wire,
     quantiles_of_centroids,
     trimmed_mean_of_centroids,
-    wrap_tdigest_wire,
 )
+
+#: constructor params of ``<kind>_agg``/``<kind>_merge_agg`` per family (the
+#: t-digest's ``delta`` is the ``register_sql_functions`` argument)
+SQL_PARAMS = {
+    "hll": {"p": 14},
+    "cms": {"width": 16384, "depth": 5},
+    "bloom": {"expected_n": 100_000, "fpr": 0.01},
+    "kll": {"k": 200},
+    "kmv": {"k": 1024},
+    "mg": {"m": 64},
+    "dd": {"alpha": 0.01, "max_bins": 2048},
+}
+
+#: the numpy dtype each ``cls.ingest`` kind reads its SQL argument as
+_INGEST_DTYPE = {"hashed": "int64", "string": object, "double": "float64"}
+
+
+def _aggregates(kind: str, params: dict):
+    """``(<kind>_agg, <kind>_merge_agg)`` as pandas GROUPED_AGG UDFs."""
+    cls = SKETCHES[kind]
+    dtype = _INGEST_DTYPE[cls.ingest]
+
+    @pandas_udf(BinaryType())
+    def agg(v: pd.Series) -> bytes:
+        s = cls(**params)
+        s.update_batch(v.dropna().to_numpy(dtype=dtype))
+        return s.settle().serialize()
+
+    @pandas_udf(BinaryType())
+    def merge_agg(blobs: pd.Series) -> bytes:
+        s = cls.absorb(None, [bytes(b) for b in blobs if b is not None], **params)
+        return (cls(**params) if s is None else s).settle().serialize()
+
+    return agg, merge_agg
+
+
+def _digest_udf(stat, ok):
+    """double per row of (digest, argument): ``stat(means, ns, x)``; NaN for
+    a NULL or empty digest or an argument ``ok`` (None: any) rejects —
+    invalid arguments degrade per row, not abort the job."""
+
+    @pandas_udf(DoubleType())
+    def f(dig: pd.Series, arg: pd.Series) -> pd.Series:
+        out = []
+        for b, x in zip(dig, arg):
+            if b is None or len(b) == 0 or (ok is not None and not ok(x)):
+                out.append(float("nan"))
+            else:
+                m, n = bytes_to_centroids(bytes(b))
+                out.append(float(stat(m, n, x)))
+        return pd.Series(out)
+
+    return f
+
+
+def _rank_ok(q) -> bool:
+    # SQL NULL doubles arrive as NaN (not None) through Arrow
+    return q is not None and not math.isnan(q) and 0.0 <= q <= 1.0
+
+
+def _estimate_udf(kind: str):
+    """double per sketch row: ``deserialize(blob).estimate()``."""
+    cls = SKETCHES[kind]
+
+    @pandas_udf(DoubleType())
+    def f(blobs: pd.Series) -> pd.Series:
+        return pd.Series([
+            float("nan") if b is None else cls.deserialize(bytes(b)).estimate()
+            for b in blobs
+        ])
+
+    return f
+
+
+def _per_row_udf(return_type, kind: str, query):
+    """``query(sketch, x)`` per row of (sketch blob, argument); NULL (NaN for
+    a double result) when either is NULL."""
+    cls = SKETCHES[kind]
+    double = isinstance(return_type, DoubleType)
+    null, dtype = (float("nan"), None) if double else (None, "object")
+
+    @pandas_udf(return_type)
+    def f(blob: pd.Series, arg: pd.Series) -> pd.Series:
+        return pd.Series([
+            null if b is None or x is None else query(cls.deserialize(bytes(b)), x)
+            for b, x in zip(blob, arg)
+        ], dtype=dtype)
+
+    return f
+
+
+def _quantile(sketch, p) -> float:
+    return float(np.atleast_1d(sketch.quantile([float(p)]))[0])
+
+
+def _key(x) -> np.ndarray:
+    return np.asarray([x], dtype=np.int64)
+
+
+@pandas_udf(DoubleType())
+def _tdigest_trimmed_mean(dig: pd.Series, lo: pd.Series, hi: pd.Series) -> pd.Series:
+    out = []
+    for b, l, h in zip(dig, lo, hi):
+        if b is None or len(b) == 0 or not (_rank_ok(l) and _rank_ok(h) and l < h):
+            out.append(float("nan"))
+        else:
+            m, n = bytes_to_centroids(bytes(b))
+            out.append(trimmed_mean_of_centroids(m, n, float(l), float(h)))
+    return pd.Series(out)
+
+
+@pandas_udf(LongType())
+def _cms_inner_product(a: pd.Series, b: pd.Series) -> pd.Series:
+    return pd.Series([
+        None if x is None or y is None
+        else int(CMS.deserialize(bytes(x)).inner_product(CMS.deserialize(bytes(y))))
+        for x, y in zip(a, b)
+    ], dtype="object")
 
 
 def register_sql_functions(spark: SparkSession, delta: float = 0.01) -> None:
-    """Idempotent registration of the sketch SQL surface (t-digest family;
-    sibling-sketch query functions are driven through their own modules)."""
+    """Idempotent registration of the sketch SQL surface: ``<kind>_agg`` and
+    ``<kind>_merge_agg`` for every ``SKETCHES`` family plus each family's
+    query functions."""
+    from sketchlib.spark import tdigest_ops as td
     from sketchlib.spark.shipping import ensure_on_workers
 
     ensure_on_workers(spark)
+    params = {"tdigest": {"delta": delta}, **SQL_PARAMS}
+    for kind in SKETCHES:
+        agg, merge_agg = _aggregates(kind, params[kind])
+        spark.udf.register(f"{kind}_agg", agg)
+        spark.udf.register(f"{kind}_merge_agg", merge_agg)
 
-    @pandas_udf(BinaryType())
-    def tdigest_agg(v: pd.Series) -> bytes:
-        d = MergingDigest(delta=delta)
-        d.update_batch(v.to_numpy(dtype="float64", na_value=np.nan))
-        d.compress()
-        return d.serialize()
-
-    @pandas_udf(BinaryType())
-    def tdigest_merge_agg(blobs: pd.Series) -> bytes:
-        d = MergingDigest.deserialize(
-            b"".join(bytes(b) for b in blobs if b is not None), delta=delta
-        )
-        d.compress()
-        return d.serialize()
-
-    @pandas_udf(DoubleType())
-    def tdigest_quantile(dig: pd.Series, p: pd.Series) -> pd.Series:
-        out = []
-        for b, pp in zip(dig, p):
-            if b is None or len(b) == 0:
-                out.append(float("nan"))
-            else:
-                m, n = bytes_to_centroids(bytes(b))
-                out.append(float(quantiles_of_centroids(m, n, [float(pp)])[0]))
-        return pd.Series(out)
-
-    @pandas_udf(DoubleType())
-    def tdigest_cdf(dig: pd.Series, q: pd.Series) -> pd.Series:
-        out = []
-        for b, qq in zip(dig, q):
-            if b is None or len(b) == 0:
-                out.append(float("nan"))
-            else:
-                m, n = bytes_to_centroids(bytes(b))
-                out.append(float(cdf_of_centroids(m, n, [float(qq)])[0]))
-        return pd.Series(out)
-
-    @pandas_udf(DoubleType())
-    def tdigest_trimmed_mean(dig: pd.Series, lo: pd.Series, hi: pd.Series) -> pd.Series:
-        import math
-
-        out = []
-        for b, l, h in zip(dig, lo, hi):
-            # SQL NULL doubles arrive as NaN (not None) through Arrow, and
-            # invalid bounds must degrade per-row, not abort the job
-            if (
-                b is None or len(b) == 0 or l is None or h is None
-                or math.isnan(l) or math.isnan(h) or not 0.0 <= l < h <= 1.0
-            ):
-                out.append(float("nan"))
-            else:
-                m, n = bytes_to_centroids(bytes(b))
-                out.append(trimmed_mean_of_centroids(m, n, float(l), float(h)))
-        return pd.Series(out)
-
-    @pandas_udf(DoubleType())
-    def tdigest_ks(dig_a: pd.Series, dig_b: pd.Series) -> pd.Series:
-        """Two-sample KS distance between two digest columns — the SQL form
-        of the drift monitor (``tdigest_ops.tdigest_ks_udf``).  NULL when
-        either side is NULL or holds zero centroids."""
-        from sketchlib.tdigest.core import ks_of_centroids
-
-        out = []
-        for a, b in zip(dig_a, dig_b):
-            if a is None or b is None or len(a) == 0 or len(b) == 0:
-                out.append(None)
-                continue
-            ma, na = bytes_to_centroids(bytes(a))
-            mb, nb = bytes_to_centroids(bytes(b))
-            if len(ma) == 0 or len(mb) == 0:
-                out.append(None)
-            else:
-                out.append(float(ks_of_centroids(ma, na, mb, nb)))
-        return pd.Series(out, dtype="float64")
-
-    @pandas_udf(DoubleType())
-    def tdigest_w1(dig_a: pd.Series, dig_b: pd.Series) -> pd.Series:
-        """1-Wasserstein distance between two digest columns — the SQL form
-        of ``tdigest_ops.tdigest_w1_udf`` (drift in VALUE units).  NULL
-        when either side is NULL or holds zero centroids."""
-        from sketchlib.tdigest.core import w1_of_centroids
-
-        out = []
-        for a, b in zip(dig_a, dig_b):
-            if a is None or b is None or len(a) == 0 or len(b) == 0:
-                out.append(None)
-                continue
-            ma, na = bytes_to_centroids(bytes(a))
-            mb, nb = bytes_to_centroids(bytes(b))
-            if len(ma) == 0 or len(mb) == 0:
-                out.append(None)
-            else:
-                out.append(float(w1_of_centroids(ma, na, mb, nb)))
-        return pd.Series(out, dtype="float64")
-
-    @pandas_udf(ArrayType(DoubleType()))
-    def tdigest_psi_jsd(dig_a: pd.Series, dig_b: pd.Series) -> pd.Series:
-        """array<double> [psi, jsd] between two digest columns — the SQL
-        form of ``tdigest_ops.tdigest_psi_jsd_udf`` at its defaults
-        (decile bins on the second argument's grid, eps 1e-6, 9-decimal
-        rounding).  NULL when either side is NULL or holds zero
-        centroids."""
-        from sketchlib.tdigest.core import psi_jsd_of_centroids
-
-        out = []
-        for a, b in zip(dig_a, dig_b):
-            if a is None or b is None or len(a) == 0 or len(b) == 0:
-                out.append(None)
-                continue
-            ma, na = bytes_to_centroids(bytes(a))
-            mb, nb = bytes_to_centroids(bytes(b))
-            if len(ma) == 0 or len(mb) == 0:
-                out.append(None)
-            else:
-                psi, jsd = psi_jsd_of_centroids(ma, na, mb, nb)
-                out.append([round(psi, 9), round(jsd, 9)])
-        return pd.Series(out)
-
-    @pandas_udf(DoubleType())
-    def tdigest_winsor_bound(dig: pd.Series, p: pd.Series) -> pd.Series:
-        """Winsorize-bound helper: the rank-``p`` clip value read off a
-        digest (discrete mode ⇒ an exact data value).  Use in pairs:
-        ``greatest(lo, least(hi, v))`` with lo = tdigest_winsor_bound(d, .05)
-        and hi = tdigest_winsor_bound(d, .95)."""
-        import math
-
-        out = []
-        for b, q in zip(dig, p):
-            if (
-                b is None or len(b) == 0 or q is None or math.isnan(q)
-                or not 0.0 <= q <= 1.0
-            ):
-                out.append(float("nan"))
-            else:
-                m, n = bytes_to_centroids(bytes(b))
-                out.append(
-                    float(quantiles_of_centroids(m, n, [float(q)],
-                                                 discrete=True)[0])
-                )
-        return pd.Series(out)
-
-    @pandas_udf(IntegerType())
-    def tdigest_size(dig: pd.Series) -> pd.Series:
-        return pd.Series([0 if b is None else len(b) // 16 for b in dig],
-                         dtype="int32")
-
-    @pandas_udf(DoubleType())
-    def tdigest_count(dig: pd.Series) -> pd.Series:
-        out = []
-        for b in dig:
-            if b is None or len(b) == 0:
-                out.append(0.0)
-            else:
-                _, n = bytes_to_centroids(bytes(b))
-                out.append(float(n.sum()))
-        return pd.Series(out)
-
-    @pandas_udf(BinaryType())
-    def tdigest_to_wire(dig: pd.Series) -> pd.Series:
-        # session-delta, merging mode: the header records how the blob was built
-        return pd.Series([
-            None if b is None else wrap_tdigest_wire(bytes(b), delta, False)
-            for b in dig
-        ])
-
-    @pandas_udf(BinaryType())
-    def tdigest_from_wire(blob: pd.Series) -> pd.Series:
-        return pd.Series([
-            None if b is None else parse_tdigest_wire(bytes(b))[0] for b in blob
-        ])
-
-    spark.udf.register("tdigest_agg", tdigest_agg)
-    spark.udf.register("tdigest_merge_agg", tdigest_merge_agg)
-    spark.udf.register("tdigest_to_wire", tdigest_to_wire)
-    spark.udf.register("tdigest_from_wire", tdigest_from_wire)
-    spark.udf.register("tdigest_quantile", tdigest_quantile)
-    spark.udf.register("tdigest_cdf", tdigest_cdf)
-    spark.udf.register("tdigest_trimmed_mean", tdigest_trimmed_mean)
-    spark.udf.register("tdigest_ks", tdigest_ks)
-    spark.udf.register("tdigest_w1", tdigest_w1)
-    spark.udf.register("tdigest_psi_jsd", tdigest_psi_jsd)
-    spark.udf.register("tdigest_winsor_bound", tdigest_winsor_bound)
-    spark.udf.register("tdigest_size", tdigest_size)
-    spark.udf.register("tdigest_count", tdigest_count)
-
-    # ---- sibling sketches ------------------------------------------------
-    from pyspark.sql.types import BooleanType, LongType
-
-    from sketchlib.bloom import Bloom
-    from sketchlib.cms import CMS
-    from sketchlib.hll import HLL
-    from sketchlib.kll import KLL
-
-    def _vals(v: pd.Series) -> np.ndarray:
-        return v.to_numpy(dtype="int64", na_value=0)
-
-    @pandas_udf(BinaryType())
-    def hll_agg(v: pd.Series) -> bytes:
-        h = HLL(p=14)
-        h.update_batch(_vals(v))
-        return h.serialize()
-
-    @pandas_udf(DoubleType())
-    def hll_estimate(blobs: pd.Series) -> pd.Series:
-        return pd.Series([
-            float("nan") if b is None else HLL.deserialize(bytes(b)).estimate()
-            for b in blobs
-        ])
-
-    @pandas_udf(BinaryType())
-    def hll_merge_agg(blobs: pd.Series) -> bytes:
-        out = None
-        for b in blobs:
-            if b is None:
-                continue
-            h = HLL.deserialize(bytes(b))
-            out = h if out is None else out.merge(h)
-        return (out or HLL(p=14)).serialize()
-
-    @pandas_udf(LongType())
-    def cms_inner_product(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(a, b):
-            if x is None or y is None:
-                out.append(None)
-                continue
-            out.append(int(
-                CMS.deserialize(bytes(x)).inner_product(
-                    CMS.deserialize(bytes(y)))
-            ))
-        return pd.Series(out, dtype="object")
-
-    @pandas_udf(BinaryType())
-    def cms_agg(v: pd.Series) -> bytes:
-        c = CMS(width=16384, depth=5)
-        c.update_batch(_vals(v))
-        return c.serialize()
-
-    @pandas_udf(LongType())
-    def cms_query(blob: pd.Series, key: pd.Series) -> pd.Series:
-        out = []
-        for b, x in zip(blob, key):
-            if b is None or x is None:
-                out.append(None)
-                continue
-            c = CMS.deserialize(bytes(b))
-            out.append(int(c.query(np.asarray([x], dtype=np.int64))[0]))
-        return pd.Series(out, dtype="object")
-
-    @pandas_udf(BinaryType())
-    def bloom_agg(v: pd.Series) -> bytes:
-        b = Bloom(expected_n=100_000, fpr=0.01)
-        b.update_batch(_vals(v))
-        return b.serialize()
-
-    @pandas_udf(BooleanType())
-    def bloom_contains(blob: pd.Series, key: pd.Series) -> pd.Series:
-        out = []
-        for b, x in zip(blob, key):
-            if b is None or x is None:
-                out.append(None)
-                continue
-            f = Bloom.deserialize(bytes(b))
-            out.append(bool(f.contains(np.asarray([x], dtype=np.int64))[0]))
-        return pd.Series(out, dtype="object")
-
-    @pandas_udf(BinaryType())
-    def kll_agg(v: pd.Series) -> bytes:
-        s = KLL(k=200)
-        s.update_batch(v.to_numpy(dtype="float64", na_value=np.nan))
-        return s.serialize()
-
-    @pandas_udf(DoubleType())
-    def kll_quantile(blob: pd.Series, p: pd.Series) -> pd.Series:
-        out = []
-        for b, pp in zip(blob, p):
-            if b is None or pp is None:
-                out.append(float("nan"))
-                continue
-            s = KLL.deserialize(bytes(b))
-            out.append(float(np.atleast_1d(s.quantile([float(pp)]))[0]))
-        return pd.Series(out)
-
-    spark.udf.register("hll_agg", hll_agg)
-    spark.udf.register("hll_merge_agg", hll_merge_agg)
-    spark.udf.register("hll_estimate", hll_estimate)
-    spark.udf.register("cms_agg", cms_agg)
-    spark.udf.register("cms_query", cms_query)
-    spark.udf.register("cms_inner_product", cms_inner_product)
-    spark.udf.register("bloom_agg", bloom_agg)
-    spark.udf.register("bloom_contains", bloom_contains)
-    from sketchlib.kmv import KMV
-
-    @pandas_udf(BinaryType())
-    def kmv_agg(v: pd.Series) -> bytes:
-        s = KMV(k=1024)
-        s.update_batch(_vals(v))
-        return s.serialize()
-
-    @pandas_udf(BinaryType())
-    def kmv_merge_agg(blobs: pd.Series) -> bytes:
-        out = None
-        for b in blobs:
-            if b is None:
-                continue
-            s = KMV.deserialize(bytes(b))
-            out = s if out is None else out.merge(s)
-        return (out or KMV(k=1024)).serialize()
-
-    @pandas_udf(DoubleType())
-    def kmv_estimate(blobs: pd.Series) -> pd.Series:
-        return pd.Series([
-            float("nan") if b is None else KMV.deserialize(bytes(b)).estimate()
-            for b in blobs
-        ])
-
-    from sketchlib.mg import MisraGries
-
-    @pandas_udf(BinaryType())
-    def mg_agg(v: pd.Series) -> bytes:
-        s = MisraGries(m=64)
-        s.update_batch(v.to_numpy(dtype=object))
-        return s.serialize()
-
-    @pandas_udf(BinaryType())
-    def mg_merge_agg(blobs: pd.Series) -> bytes:
-        out = None
-        for b in blobs:
-            if b is None:
-                continue
-            s = MisraGries.deserialize(bytes(b))
-            out = s if out is None else out.merge(s)
-        return (out or MisraGries(m=64)).serialize()
-
-    @pandas_udf(LongType())
-    def mg_estimate(blob: pd.Series, item: pd.Series) -> pd.Series:
-        out = []
-        for b, x in zip(blob, item):
-            if b is None or x is None:
-                out.append(None)
-                continue
-            out.append(MisraGries.deserialize(bytes(b)).estimate(str(x)))
-        return pd.Series(out, dtype="object")
-
-    from sketchlib.ddsketch import DDSketch
-
-    @pandas_udf(BinaryType())
-    def dd_agg(v: pd.Series) -> bytes:
-        s = DDSketch(alpha=0.01, max_bins=2048)
-        s.update_batch(v.to_numpy(dtype="float64", na_value=np.nan))
-        return s.serialize()
-
-    @pandas_udf(BinaryType())
-    def dd_merge_agg(blobs: pd.Series) -> bytes:
-        out = None
-        for b in blobs:
-            if b is None:
-                continue
-            s = DDSketch.deserialize(bytes(b))
-            out = s if out is None else out.merge(s)
-        return (out or DDSketch(alpha=0.01, max_bins=2048)).serialize()
-
-    @pandas_udf(DoubleType())
-    def dd_quantile(blob: pd.Series, p: pd.Series) -> pd.Series:
-        out = []
-        for b, pp in zip(blob, p):
-            if b is None or pp is None:
-                out.append(float("nan"))
-                continue
-            s = DDSketch.deserialize(bytes(b))
-            out.append(float(np.atleast_1d(s.quantile([float(pp)]))[0]))
-        return pd.Series(out)
-
-    spark.udf.register("kll_agg", kll_agg)
-    spark.udf.register("kll_quantile", kll_quantile)
-    spark.udf.register("dd_agg", dd_agg)
-    spark.udf.register("dd_merge_agg", dd_merge_agg)
-    spark.udf.register("dd_quantile", dd_quantile)
-    spark.udf.register("kmv_agg", kmv_agg)
-    spark.udf.register("kmv_merge_agg", kmv_merge_agg)
-    spark.udf.register("kmv_estimate", kmv_estimate)
-    spark.udf.register("mg_agg", mg_agg)
-    spark.udf.register("mg_merge_agg", mg_merge_agg)
-    spark.udf.register("mg_estimate", mg_estimate)
+    for name, f in {
+        "tdigest_to_wire": td.tdigest_wire_udf(delta),
+        "tdigest_from_wire": td.tdigest_unwire_udf,
+        "tdigest_quantile": _digest_udf(
+            lambda m, n, p: quantiles_of_centroids(m, n, [float(p)])[0], None),
+        "tdigest_cdf": _digest_udf(
+            lambda m, n, q: cdf_of_centroids(m, n, [float(q)])[0], None),
+        "tdigest_trimmed_mean": _tdigest_trimmed_mean,
+        "tdigest_ks": td.tdigest_ks_udf,
+        "tdigest_w1": td.tdigest_w1_udf,
+        "tdigest_psi_jsd": td.tdigest_psi_jsd_udf(),
+        # the rank-p clip value read off a digest (discrete mode ⇒ an exact
+        # data value); use in pairs: greatest(lo, least(hi, v))
+        "tdigest_winsor_bound": _digest_udf(
+            lambda m, n, q: quantiles_of_centroids(m, n, [float(q)], discrete=True)[0],
+            _rank_ok),
+        "tdigest_size": td.tdigest_size_udf,
+        "tdigest_count": td.tdigest_count_udf,
+        "hll_estimate": _estimate_udf("hll"),
+        "kmv_estimate": _estimate_udf("kmv"),
+        "kll_quantile": _per_row_udf(DoubleType(), "kll", _quantile),
+        "dd_quantile": _per_row_udf(DoubleType(), "dd", _quantile),
+        "cms_query": _per_row_udf(
+            LongType(), "cms", lambda c, x: int(c.query(_key(x))[0])),
+        "cms_inner_product": _cms_inner_product,
+        "bloom_contains": _per_row_udf(
+            BooleanType(), "bloom", lambda f, x: bool(f.contains(_key(x))[0])),
+        "mg_estimate": _per_row_udf(
+            LongType(), "mg", lambda s, x: s.estimate(str(x))),
+    }.items():
+        spark.udf.register(name, f)

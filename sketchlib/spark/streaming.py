@@ -23,9 +23,13 @@ byte-identical to the batch build over the same rows, regardless of trigger
 boundaries or arrival order — asserted in tests/test_streaming.py; the same
 holds for the order-insensitive sibling sketches (HLL/CMS/Bloom/KMV).
 
-The three windowed sketch operators share one skeleton
-(``_stateful_windowed``) so the empirically-measured timezone and timeout
-semantics live in ONE place.  Two further streaming pipeline ops live
+Every windowed sketch operator (``streaming_tdigest``,
+``streaming_tdigest_final``, ``streaming_sketch`` and, through them,
+``streaming_drift_monitor``) is one plan spec driven through one skeleton
+(``_stateful_windowed``): the projection, the per-batch read and the sketch
+update are the batch plan's own (``sketch_ops._project``/``_spec_vals``/
+``_update``), and the empirically-measured timezone and timeout semantics
+live in ONE place.  Two further streaming pipeline ops live
 here: ``streaming_sessions`` (gap-based session windows with full
 late-event bridge/extend semantics, custom interval-merge state) and
 ``streaming_exact_dedup`` (Spark's native stateful ``dropDuplicates`` on
@@ -35,11 +39,11 @@ the content hash, watermark-bounded state).
 from __future__ import annotations
 
 from datetime import timezone
-from typing import Callable, Iterable, Iterator
+from typing import Iterable, Iterator
 from zoneinfo import ZoneInfo
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BinaryType,
@@ -49,7 +53,14 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from sketchlib.tdigest.core import MergingDigest
+from sketchlib.spark.sketch_ops import (
+    SKETCHES,
+    _check_specs,
+    _project,
+    _spec,
+    _spec_vals,
+    _update,
+)
 
 
 def _session_tz(df: DataFrame):
@@ -113,9 +124,7 @@ def _key_ts_out(dt, tz):
 def _stateful_windowed(
     stream: DataFrame,
     keys: list[str],
-    val_expr: Column,
-    restore: Callable[[bytes | None], object],
-    ingest: Callable[[object, pd.Series], None],
+    spec: dict,
     out_name: str,
     ts_col: str,
     window: str,
@@ -141,27 +150,32 @@ def _stateful_windowed(
     ``mode='update'``: emit a snapshot row per touched window per trigger;
     on timeout just evict.  ``mode='append'``: emit nothing until the
     watermark passes window_end, then emit the finished sketch exactly once
-    and evict.  ``restore(blob_or_None)`` builds the aggregator (merging
-    prior state); ``ingest(agg, series)`` absorbs one Arrow batch's values.
+    and evict.
+
+    ``spec`` is a plan spec (``kind``, ``col``, ``params``; see
+    ``sketch_ops.profile_partials``).  The window's values are projected,
+    read and ingested exactly as the batch plan does it (pre-hash plus null
+    mask for hashed kinds, string/double casts otherwise), and state is
+    restored with ``cls.deserialize(blob, **params)`` — so a window's
+    sketch is the batch plan's sketch over the same rows.
     """
     from sketchlib.spark.shipping import ensure_on_workers
 
     ensure_on_workers(stream.sparkSession)
+    _check_specs([spec])
+    cls = SKETCHES[spec["kind"]]
+    params = dict(spec.get("params") or {})
     tz = _session_tz(stream)
-    keyed = (
+    windowed = (
         stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
         .withWatermark(ts_col, watermark)
         .withColumn("_win", F.window(F.col(ts_col), window, slide or window))
-        .select(
-            *keys,
-            F.col("_win.start").alias("window_start"),
-            F.col("_win.end").alias("window_end"),
-            val_expr.alias("_v"),
-            # the watermarked column must survive to the stateful operator
-            # for EventTimeTimeout to be legal
-            F.col(ts_col),
-        )
+        .withColumn("window_start", F.col("_win.start"))
+        .withColumn("window_end", F.col("_win.end"))
     )
+    # the watermarked column must survive to the stateful operator for
+    # EventTimeTimeout to be legal
+    keyed = _project(windowed, keys + ["window_start", "window_end", ts_col], [spec])
     key_fields = [keyed.schema[k] for k in keys]
     out_schema = StructType(
         [StructField(f.name, f.dataType, True) for f in key_fields]
@@ -194,9 +208,9 @@ def _stateful_windowed(
             (b,) = state.get
             if b:
                 prev = bytes(b)
-        agg = restore(prev)
+        agg = cls.deserialize(prev, **params) if prev else cls(**params)
         for pdf in pdfs:
-            ingest(agg, pdf["_v"])
+            _update(agg, *_spec_vals(spec, pdf, 0), slice(None))
         blob = agg.serialize()
         state.update((blob,))
         # (re)arm the timeout at window_end (epoch ms from the UTC-naive
@@ -215,19 +229,6 @@ def _stateful_windowed(
         outputMode=mode,
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-
-
-def _digest_hooks(delta: float, discrete: bool):
-    def restore(blob: bytes | None) -> MergingDigest:
-        d = MergingDigest(delta=delta, discrete=discrete)
-        if blob:
-            d.merge_bytes(blob)
-        return d
-
-    def ingest(d: MergingDigest, v: pd.Series) -> None:
-        d.update_batch(v.to_numpy(dtype="float64"))
-
-    return restore, ingest
 
 
 def streaming_tdigest(
@@ -249,9 +250,9 @@ def streaming_tdigest(
     merges apply unchanged.  ``slide`` makes the windows sliding ("p99 over
     the trailing hour, every 5 minutes") — see ``_stateful_windowed``.
     """
-    restore, ingest = _digest_hooks(delta, discrete)
     return _stateful_windowed(
-        stream, keys, F.col(value_col).cast("double"), restore, ingest,
+        stream, keys,
+        _spec("tdigest", {"delta": delta, "discrete": discrete}, col=value_col),
         "digest", ts_col, window, watermark, mode="update", slide=slide,
     )
 
@@ -278,9 +279,9 @@ def streaming_tdigest_final(
     crosses it — that call emits the finished digest and drops the state.
     Until then the function emits nothing.
     """
-    restore, ingest = _digest_hooks(delta, discrete)
     return _stateful_windowed(
-        stream, keys, F.col(value_col).cast("double"), restore, ingest,
+        stream, keys,
+        _spec("tdigest", {"delta": delta, "discrete": discrete}, col=value_col),
         "digest", ts_col, window, watermark, mode="append", slide=slide,
     )
 
@@ -545,42 +546,17 @@ def streaming_sketch(
     watermark: str = "2 hours",
     slide: str | None = None,
 ) -> DataFrame:
-    """Per-(keys × event-time window) sibling sketch (hll/cms/bloom/kll/kmv/mg)
-    over a streaming DataFrame — ``streaming_tdigest`` generalized to the
-    whole Aggregator family via the same skeleton.
+    """Per-(keys × event-time window) sketch of any ``SKETCHES`` family
+    (hll/cms/bloom/kll/kmv/mg/dd, or tdigest) over a streaming DataFrame —
+    ``streaming_tdigest`` generalized to the whole Aggregator family via the
+    same skeleton and the batch plan's spec ingest.
 
-    Hashing stays JVM-side (``xxhash64`` projection for the hashed sketches,
-    exactly like the batch path in ``sketchlib.spark.sketch_ops``), so
+    Hashing stays JVM-side (``xxhash64`` projection plus a null mask for the
+    hashed sketches, exactly like ``sketchlib.spark.sketch_ops``), so
     stream- and batch-built sketches are interchangeable — byte-identical
-    for the order-insensitive sketches (HLL/CMS/Bloom/KMV).
+    for the order-insensitive sketches (HLL/CMS/Bloom/KMV/DDSketch).
     """
-    import numpy as np
-
-    from sketchlib.spark.sketch_ops import SKETCHES
-
-    cls = SKETCHES[sketch]
-    params = dict(params or {})
-    hashed = cls.ingest == "hashed"
-    raw = cls.ingest == "string"  # mg: the sketch must report raw items back
-
-    def restore(blob: bytes | None):
-        return cls.deserialize(blob, **params) if blob else cls(**params)
-
-    def ingest(sk, v: pd.Series) -> None:
-        if hashed:
-            sk.update_hashed(v.to_numpy(dtype="int64").view(np.uint64))
-        elif raw:
-            sk.update_batch(v.to_numpy(dtype=object))
-        else:
-            sk.update_batch(v.to_numpy(dtype="float64"))
-
-    if hashed:
-        val = F.xxhash64(value_col)
-    elif raw:
-        val = F.col(value_col).cast("string")
-    else:
-        val = F.col(value_col).cast("double")
     return _stateful_windowed(
-        stream, keys, val, restore, ingest,
+        stream, keys, _spec(sketch, params, col=value_col),
         "sketch", ts_col, window, watermark, mode="update", slide=slide,
     )

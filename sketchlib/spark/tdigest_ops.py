@@ -267,27 +267,29 @@ def tdigest_centroids_udf(dig: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
+def _pairwise(dig_a: pd.Series, dig_b: pd.Series, stat) -> list:
+    """``stat(ma, na, mb, nb)`` per row of two digest columns, None when
+    either side is NULL or holds zero centroids — the documented contract of
+    the two-digest drift UDFs is NULL for an empty side, not the NaN the
+    centroid statistics would surface (ADVICE r03)."""
+    out = []
+    for a, b in zip(dig_a, dig_b):
+        if a is None or b is None or len(a) == 0 or len(b) == 0:
+            out.append(None)
+            continue
+        ma, na = bytes_to_centroids(bytes(a))
+        mb, nb = bytes_to_centroids(bytes(b))
+        out.append(None if len(ma) == 0 or len(mb) == 0 else stat(ma, na, mb, nb))
+    return out
+
+
 @pandas_udf(DoubleType())
 def tdigest_ks_udf(dig_a: pd.Series, dig_b: pd.Series) -> pd.Series:
     """Two-sample KS distance between two digest columns per row
     (``ks_of_centroids``): drift detection between stored sketches, zero
     fact rescans.  Exact when both digests are discrete; NULL if either
     side is empty.  Post-aggregation only (runs on sketch rows)."""
-    out = []
-    for a, b in zip(dig_a, dig_b):
-        if a is None or b is None or len(a) == 0 or len(b) == 0:
-            out.append(None)
-        else:
-            ma, na = bytes_to_centroids(bytes(a))
-            mb, nb = bytes_to_centroids(bytes(b))
-            # a VALID blob can still hold zero centroids — the documented
-            # contract is NULL for an empty side, not the NaN that
-            # ks_of_centroids would surface (ADVICE r03)
-            if len(ma) == 0 or len(mb) == 0:
-                out.append(None)
-            else:
-                out.append(ks_of_centroids(ma, na, mb, nb))
-    return pd.Series(out, dtype="float64")
+    return pd.Series(_pairwise(dig_a, dig_b, ks_of_centroids), dtype="float64")
 
 
 @pandas_udf(DoubleType())
@@ -301,18 +303,7 @@ def tdigest_w1_udf(dig_a: pd.Series, dig_b: pd.Series) -> pd.Series:
     a foreign engine's sum order can flip final ulps at a value-hash."""
     from sketchlib.tdigest.core import w1_of_centroids
 
-    out = []
-    for a, b in zip(dig_a, dig_b):
-        if a is None or b is None or len(a) == 0 or len(b) == 0:
-            out.append(None)
-        else:
-            ma, na = bytes_to_centroids(bytes(a))
-            mb, nb = bytes_to_centroids(bytes(b))
-            if len(ma) == 0 or len(mb) == 0:
-                out.append(None)
-            else:
-                out.append(w1_of_centroids(ma, na, mb, nb))
-    return pd.Series(out, dtype="float64")
+    return pd.Series(_pairwise(dig_a, dig_b, w1_of_centroids), dtype="float64")
 
 
 def tdigest_psi_jsd_udf(bins: int = 10, eps: float = 1e-6, ndigits: int = 9):
@@ -328,23 +319,15 @@ def tdigest_psi_jsd_udf(bins: int = 10, eps: float = 1e-6, ndigits: int = 9):
     if bins < 2:
         raise ValueError(f"tdigest_psi_jsd: need bins >= 2, got {bins}")
 
+    def stat(ma, na, mb, nb) -> list:
+        psi, jsd = psi_jsd_of_centroids(ma, na, mb, nb, bins, eps)
+        if ndigits is not None:
+            psi, jsd = round(psi, ndigits), round(jsd, ndigits)
+        return [psi, jsd]
+
     @pandas_udf(ArrayType(DoubleType()))
     def f(dig_a: pd.Series, dig_b: pd.Series) -> pd.Series:
-        out = []
-        for a, b in zip(dig_a, dig_b):
-            if a is None or b is None or len(a) == 0 or len(b) == 0:
-                out.append(None)
-                continue
-            ma, na = bytes_to_centroids(bytes(a))
-            mb, nb = bytes_to_centroids(bytes(b))
-            if len(ma) == 0 or len(mb) == 0:
-                out.append(None)
-            else:
-                psi, jsd = psi_jsd_of_centroids(ma, na, mb, nb, bins, eps)
-                if ndigits is not None:
-                    psi, jsd = round(psi, ndigits), round(jsd, ndigits)
-                out.append([psi, jsd])
-        return pd.Series(out)
+        return pd.Series(_pairwise(dig_a, dig_b, stat))
 
     return f
 

@@ -184,6 +184,21 @@ def test_drift_monitor_timeline_mode(spark, tmp_path, monkeypatch):
         assert not r2["drifted"] and r2["ks_prev"] == 0.0
     assert rep["n_drifted"] == 1
 
+    # --w1-threshold gates timeline mode too: with KS unable to fire, the
+    # hot lang's value shift alone (W1 in value units) is the only drift
+    out_w1 = str(tmp_path / "timeline_w1")
+    monkeypatch.setattr(sys, "argv", [
+        "job", "--timeline", digs, "--epoch-col", "epoch",
+        "--key-cols", "lang", "--quantiles", "0.5,0.95", "--discrete",
+        "--ks-threshold", "1.0", "--w1-threshold", "100", "--output", out_w1])
+    rc = job.main()
+    rep = json.loads(capture[-1])
+    assert rc == 2
+    assert rep["w1_threshold"] == 100 and rep["max_w1"] > 100
+    drifted = {(r["lang"], r["epoch"]) for r in spark.read.parquet(out_w1)
+               .filter("drifted").collect()}
+    assert drifted == {(hot, 2)}
+
 
 def test_digest_timeline_moving_average(spark):
     """ma_window=k smooths each quantile over the trailing k STORED epochs

@@ -1,6 +1,8 @@
-"""dist/sketchlib.zip must track the source tree — a stale deploy artifact
-(spark-submit --py-files) fails at runtime with ModuleNotFoundError on
-exactly the newest modules, which is how it bit round 3."""
+"""The shipped sketchlib.zip must track the source tree — a stale deploy
+artifact (spark-submit --py-files) fails at runtime with ModuleNotFoundError
+on exactly the newest modules, which is how it bit round 3.  Executor
+shipping and tools/package.py share one builder, so the check builds through
+it rather than trusting a gitignored dist/ file."""
 
 import os
 import zipfile
@@ -8,9 +10,10 @@ import zipfile
 from tests.conftest import REPO_ROOT
 
 
-def test_dist_zip_is_fresh():
-    zpath = os.path.join(REPO_ROOT, "dist", "sketchlib.zip")
-    assert os.path.exists(zpath), "run: python tools/package.py"
+def test_dist_zip_is_fresh(tmp_path):
+    from sketchlib.spark.shipping import build_zip
+
+    zpath = build_zip(str(tmp_path / "sketchlib.zip"))
     with zipfile.ZipFile(zpath) as z:
         in_zip = {i.filename: i.file_size for i in z.infolist()}
     src = {}
@@ -21,7 +24,7 @@ def test_dist_zip_is_fresh():
                 full = os.path.join(root, f)
                 src[os.path.relpath(full, REPO_ROOT)] = os.path.getsize(full)
     assert in_zip == src, (
-        "dist/sketchlib.zip is stale — run: python tools/package.py; "
+        "build_zip does not ship the sketchlib/*.py tree: "
         f"missing={sorted(set(src) - set(in_zip))} "
         f"extra={sorted(set(in_zip) - set(src))} "
         f"size_diff={sorted(k for k in src.keys() & in_zip.keys() if src[k] != in_zip[k])}"

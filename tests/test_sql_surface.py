@@ -85,31 +85,83 @@ def test_sql_sibling_sketches(spark):
         assert abs(rank - 0.5) < 0.02, (r["event_type"], rank)
 
 
-def test_sql_dd_merge_agg_bitwise(spark):
-    """dd_merge_agg over per-source sketches is byte-identical to the
-    direct per-lang build — the family's bitwise merge law, on the SQL
-    surface."""
+#: the SQL surface before ``*_agg``/``*_merge_agg`` were generated per family
+PARENT_SQL_NAMES = {
+    "tdigest_agg", "tdigest_merge_agg", "tdigest_to_wire", "tdigest_from_wire",
+    "tdigest_quantile", "tdigest_cdf", "tdigest_trimmed_mean", "tdigest_ks",
+    "tdigest_w1", "tdigest_psi_jsd", "tdigest_winsor_bound", "tdigest_size",
+    "tdigest_count",
+    "hll_agg", "hll_merge_agg", "hll_estimate",
+    "cms_agg", "cms_query", "cms_inner_product",
+    "bloom_agg", "bloom_contains",
+    "kll_agg", "kll_quantile",
+    "dd_agg", "dd_merge_agg", "dd_quantile",
+    "kmv_agg", "kmv_merge_agg", "kmv_estimate",
+    "mg_agg", "mg_merge_agg", "mg_estimate",
+}
+
+#: families whose merge is bitwise, with the SQL argument each aggregates
+BITWISE_MERGE = {"hll": "n_chars", "kmv": "n_chars", "cms": "n_chars",
+                 "bloom": "n_chars", "dd": "CAST(n_chars AS DOUBLE)"}
+
+
+def test_sql_dd_merge_agg_bitwise(spark, monkeypatch):
+    """The SQL surface is pinned: every family gets ``<kind>_agg`` and
+    ``<kind>_merge_agg`` (cms/bloom/kll merges are new) beside the query
+    functions.  For each family whose merge is bitwise (dd, hll, kmv, cms,
+    bloom), ``<kind>_merge_agg`` over per-source sketches is byte-identical
+    to the direct per-lang build — the merge law, on the SQL surface."""
+    from pyspark.sql.udf import UDFRegistration
+
+    from sketchlib.spark.sql import register_sql_functions
+
+    names = []
+    register = UDFRegistration.register
+
+    def spy(self, name, f, *args, **kwargs):
+        names.append(name)
+        return register(self, name, f, *args, **kwargs)
+
+    monkeypatch.setattr(UDFRegistration, "register", spy)
+    register_sql_functions(spark)
+    assert len(names) == len(set(names))
+    assert set(names) == PARENT_SQL_NAMES | {
+        "cms_merge_agg", "bloom_merge_agg", "kll_merge_agg"}
+
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+    docs.createOrReplaceTempView("docs_dd_sql")
+    built = ", ".join(f"{k}_agg({c}) AS {k}" for k, c in BITWISE_MERGE.items())
+    merged = ", ".join(f"{k}_merge_agg({k}) AS {k}" for k in BITWISE_MERGE)
+    m = spark.sql(f"""
+        WITH per_src AS (
+          SELECT lang, source, {built} FROM docs_dd_sql GROUP BY lang, source
+        )
+        SELECT lang, {merged} FROM per_src GROUP BY lang
+    """).collect()
+    x = spark.sql(f"SELECT lang, {built} FROM docs_dd_sql GROUP BY lang").collect()
+    direct = {r["lang"]: r for r in x}
+    assert m and {r["lang"] for r in m} == set(direct)
+    for r in m:
+        for k in BITWISE_MERGE:
+            assert bytes(r[k]) == bytes(direct[r["lang"]][k]), (k, r["lang"])
+
+
+@pytest.mark.parametrize("kind", ["hll", "kmv", "cms", "bloom"])
+def test_sql_hashed_agg_skips_nulls(spark, kind):
+    """A NULL is not a value: the hashed aggregates over {1, 2, NULL} are
+    byte-equal to the same aggregate over {1, 2} (NULL used to be ingested
+    as the value 0)."""
     from sketchlib.spark.sql import register_sql_functions
 
     register_sql_functions(spark)
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    docs.createOrReplaceTempView("docs_dd_sql")
-    rows = spark.sql("""
-        WITH per_src AS (
-          SELECT lang, source, dd_agg(CAST(n_chars AS DOUBLE)) AS d
-          FROM docs_dd_sql GROUP BY lang, source
-        ), merged AS (
-          SELECT lang, dd_merge_agg(d) AS d FROM per_src GROUP BY lang
-        ), direct AS (
-          SELECT lang, dd_agg(CAST(n_chars AS DOUBLE)) AS d
-          FROM docs_dd_sql GROUP BY lang
-        )
-        SELECT m.lang, m.d AS merged, x.d AS direct
-        FROM merged m JOIN direct x USING (lang)
-    """).collect()
-    assert rows
-    for r in rows:
-        assert bytes(r["merged"]) == bytes(r["direct"]), r["lang"]
+    spark.createDataFrame([(1,), (2,), (None,)], "x long") \
+        .createOrReplaceTempView("hashed_nulls")
+    with_null, without = (
+        bytes(spark.sql(f"SELECT {kind}_agg(x) AS s FROM hashed_nulls {where}")
+              .collect()[0]["s"])
+        for where in ("", "WHERE x IS NOT NULL")
+    )
+    assert with_null == without
 
 
 def test_sql_merge_agg_interchangeable_with_two_phase(spark):

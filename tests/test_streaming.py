@@ -279,6 +279,11 @@ def test_streaming_sibling_sketches_match_batch(spark, tmp_path):
     src = str(tmp_path / "srcs")
     os.makedirs(src)
     _write_chunks(src, n_files=3)
+    # one more chunk holding NULL n_chars: a NULL is never ingested (the
+    # JVM-side xxhash64(NULL) is 42, not NULL), in the stream as in batch
+    nulls = pd.read_parquet(os.path.join(src, "chunk-0.parquet")).head(40)
+    nulls["n_chars"] = nulls["n_chars"].where(np.arange(40) % 2 == 1)
+    nulls.to_parquet(os.path.join(src, "chunk-3.parquet"))
     static = spark.read.parquet(src)
     batch = static.withColumn("_w", F.window("warc_ts", "1 hour")).select(
         "lang", F.col("_w.start").alias("window_start"), "n_chars"
@@ -331,7 +336,9 @@ def test_streaming_sibling_sketches_match_batch(spark, tmp_path):
     rows = batch.collect()
     vals = {}
     for r in rows:
-        vals.setdefault((r["lang"], r["window_start"]), []).append(r["n_chars"])
+        vs = vals.setdefault((r["lang"], r["window_start"]), [])
+        if r["n_chars"] is not None:
+            vs.append(r["n_chars"])
     assert set(latest) == set(vals)
     for k, vs in vals.items():
         vs = np.sort(np.asarray(vs))

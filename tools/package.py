@@ -1,27 +1,19 @@
 """Build dist/sketchlib.zip for ``spark-submit --py-files`` deployment.
 
-Usage: python tools/package.py   ->  dist/sketchlib.zip
+Usage: python tools/package.py [out_path]   ->  dist/sketchlib.zip
+
+A thin CLI over ``sketchlib.spark.shipping.build_zip``, the same builder
+that ships the package to executors at run time.
 """
 
 import os
 import sys
-import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-
-def build_zip(out_path: str | None = None) -> str:
-    out_path = out_path or os.path.join(REPO, "dist", "sketchlib.zip")
-    os.makedirs(os.path.dirname(out_path), exist_ok=True)
-    pkg = os.path.join(REPO, "sketchlib")
-    with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as z:
-        for root, _dirs, files in os.walk(pkg):
-            for f in sorted(files):
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    z.write(full, os.path.relpath(full, REPO))
-    return out_path
-
+from sketchlib.spark.shipping import build_zip  # noqa: E402
 
 if __name__ == "__main__":
-    print(build_zip(sys.argv[1] if len(sys.argv) > 1 else None))
+    print(build_zip(sys.argv[1] if len(sys.argv) > 1
+                    else os.path.join(REPO, "dist", "sketchlib.zip")))
